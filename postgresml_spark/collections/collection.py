@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from postgresml_spark.collections.storage import (
     BucketedVersionedTable,
+    atomic_write,
     parquet_dir_stats,
 )
 from postgresml_spark.operators.filter_dsl import (
@@ -169,9 +170,10 @@ class Collection:
                 continue
         if pruned_any:
             prev = self._pruned_upto()
-            with open(os.path.join(self._changes_path,
-                                   "_pruned_upto.json"), "w") as f:
-                _json.dump({"upto_seq": max(int(upto_seq), prev)}, f)
+            atomic_write(
+                os.path.join(self._changes_path, "_pruned_upto.json"),
+                _json.dumps({"upto_seq": max(int(upto_seq), prev)}),
+            )
 
     def _pruned_upto(self) -> int:
         """Highest change-log seq ever pruned (-1 if none): the floor

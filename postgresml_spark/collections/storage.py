@@ -1,21 +1,112 @@
-"""Versioned parquet tables with merge/delete (Delta-less MERGE emulation).
+"""Versioned parquet tables: one commit protocol for every write.
 
-The reference mutates Postgres tables in place (MERGE-style upserts,
-queries.rs:146-169). Without Delta jars in this image, each logical
-table is a directory of immutable parquet versions plus a `_current`
-pointer file; writers materialize the new state to `v_<n+1>` and flip
-the pointer (write-ahead, last-writer-wins — the same pattern Delta's
-transaction log formalizes). Readers always see a complete version.
-At cluster scale the pointer flip would live in a real table format
+The reference mutates Postgres tables inside transactions (MERGE-style
+upserts, queries.rs:146-169). Without Delta jars in this image, each
+logical table is a directory of immutable version dirs `v_<n>` plus a
+`_current` pointer file naming the published one. Every versioned
+write (full overwrite, bucket-partial overwrite, delta write; one table
+or several) goes through `_commit`, in three fixed steps:
+
+1. Stage. One Spark job writes every table's new files into a
+   dot-prefixed scratch dir. Then, per table, the driver deletes any
+   unpublished leftover `v_<cur+1>`, moves the new files in, hardlinks
+   the previous version's buckets the write does not replace, and
+   writes the sidecars (`_delta`, `_tombstones`, `_schema.json`,
+   `_stats.json`).
+2. Publish. Only after every table is staged, each pointer is written
+   to a dot-prefixed temp file and moved into place with `os.replace`,
+   so a reader sees the old number or the new one, never a torn file.
+3. Vacuum. Versions older than the newest `keep_versions` go last.
+
+What a crash (or an exception) leaves behind:
+- During stage: no pointer has moved, so every table reads its old
+  version. The half-built `v_<cur+1>` dirs are invisible, because
+  `versions()` lists only published numbers, and the next commit
+  deletes them before it stages again.
+- During publish: tables whose pointer moved read the new version, the
+  rest the old one. Each table is coherent on its own, and a retried
+  sync brings the laggards forward.
+- During vacuum: old versions stay on disk until the next vacuum.
+
+The gap that remains: pointers are replaced one table at a time, so
+between two replaces (or after a crash mid-publish) a reader can see a
+pipeline field's chunks and embeddings at different versions. Closing
+it needs a field-level manifest published with a single replace.
+
+At cluster scale the pointer would live in a real table format
 (Delta/Iceberg); every caller goes through this module, so swapping
 the backend is one file.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
+_warned: set[str] = set()
+
+
+def _warn_once(key: str, msg: str, *args) -> None:
+    """Log a silent-fallback warning the first time `key` fires."""
+    if key not in _warned:
+        _warned.add(key)
+        _log.warning(msg, *args)
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Replace `path`'s content so a concurrent reader sees the old text
+    or the new, never a torn file: write a dot-prefixed temp sibling
+    (hidden from Spark's file listing and from `versions()`), then
+    `os.replace` it into place. Every pointer and JSON sidecar in
+    `collections/` is written through here."""
+    d, leaf = os.path.split(path)
+    tmp = os.path.join(d, f".{leaf}.{uuid.uuid4().hex[:8]}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _read_json(path: str) -> dict:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (FileNotFoundError, ValueError):
+        return {}
+
+
+def _link_files(src: str, dst: str) -> None:
+    """Hardlink every parquet file of `src` into `dst` (copy where the
+    file system refuses links)."""
+    os.makedirs(dst, exist_ok=True)
+    for fn in os.listdir(src):
+        if fn.endswith(".parquet"):
+            s, d = os.path.join(src, fn), os.path.join(dst, fn)
+            try:
+                os.link(s, d)
+            except OSError:
+                shutil.copy2(s, d)
+
+
+def _read_keys(tomb_dir: str) -> set:
+    """Driver-side read of a `_tombstones` dir's key set (empty if
+    absent)."""
+    import pyarrow.parquet as pq
+
+    keys: set = set()
+    if os.path.isdir(tomb_dir):
+        for fn in os.listdir(tomb_dir):
+            if fn.endswith(".parquet"):
+                keys.update(
+                    pq.read_table(os.path.join(tomb_dir, fn))
+                    .column("__key").to_pylist()
+                )
+    return keys
 
 
 def _filter_keys_not_in(df: DataFrame, kcol, keys) -> DataFrame:
@@ -31,13 +122,17 @@ def _filter_keys_not_in(df: DataFrame, kcol, keys) -> DataFrame:
     SQL `IN (...)` string keeps the driver cost O(len) string-build;
     Catalyst converts the parsed In to the same InSet (hash set) past
     10 elements that isin produced, so the executed plan is identical.
-    Keys are SQL-quoted with '' escaping; the temp column binds an
-    arbitrary key EXPRESSION (the derived tables key on an expression
-    over chunk_id, not a named column) and collapses away."""
+    Keys are SQL-quoted for the default parser
+    (`spark.sql.parser.escapedStringLiterals=false`): `\\` is doubled
+    first, so a key ending in a backslash cannot escape the closing
+    quote, then `'` becomes `''`. The temp column binds an arbitrary
+    key EXPRESSION (the derived tables key on an expression over
+    chunk_id, not a named column) and collapses away."""
     from pyspark.sql import functions as F
 
     quoted = ",".join(
-        "'" + str(k).replace("'", "''") + "'" for k in keys
+        "'" + str(k).replace("\\", "\\\\").replace("'", "''") + "'"
+        for k in keys
     )
     tmp = "__in_set_key"
     return (
@@ -120,6 +215,9 @@ def parquet_dir_stats(
 
 
 class VersionedTable:
+    # partition columns of a version dir's files (none: one flat dir)
+    _part_cols: tuple[str, ...] = ()
+
     def __init__(self, spark: SparkSession, path: str, schema: str):
         self.spark = spark
         self.path = path
@@ -128,6 +226,9 @@ class VersionedTable:
 
     def _pointer(self) -> str:
         return os.path.join(self.path, "_current")
+
+    def _vdir(self, v: int) -> str:
+        return os.path.join(self.path, f"v_{v}")
 
     # -- zero-job reads: schema sidecars --------------------------------------
     #
@@ -139,22 +240,23 @@ class VersionedTable:
     # (the sidecar IS the written schema, not the declared one).
 
     def _save_schema(self, vdir: str, schema, delta_schema=None) -> None:
-        import json
-
         payload = {}
         if schema is not None:
             payload["files"] = schema.json()
         if delta_schema is not None:
             payload["delta"] = delta_schema.json()
         try:
-            with open(os.path.join(vdir, "_schema.json"), "w") as f:
-                json.dump(payload, f)
-        except OSError:
-            pass  # sidecar is an optimization; readers fall back to inference
+            atomic_write(os.path.join(vdir, "_schema.json"),
+                         json.dumps(payload))
+        except OSError as e:
+            _warn_once(
+                "save_schema",
+                "schema sidecar not written under %s (%s); reads of such "
+                "versions infer the schema and project to the declared one",
+                self.path, e,
+            )
 
     def _load_schema(self, vdir: str, key: str = "files"):
-        import json
-
         from pyspark.sql import types as T
 
         try:
@@ -166,14 +268,20 @@ class VersionedTable:
         except (OSError, ValueError, KeyError):
             return None
 
-    def _read_version_dir(self, vdir: str):
-        """Parquet read of a version dir with the recorded write-time
-        schema when available (zero-job), inference otherwise."""
-        sch = self._load_schema(vdir)
-        r = self.spark.read
+    def _read_files(self, path: str, sch):
+        """Parquet read with the recorded write-time schema `sch`
+        (zero-job). Without it: infer, then project to the declared
+        columns — files of a multi-table commit carry the union schema,
+        whose sibling columns are all NULL here."""
         if sch is not None:
-            r = r.schema(sch)
-        return r.parquet(vdir)
+            return self.spark.read.schema(sch).parquet(path)
+        df = self.spark.read.parquet(path)
+        keep = set(self.spark.createDataFrame([], self.schema).columns)
+        keep.update(self._part_cols)
+        return df.select(*[c for c in df.columns if c in keep])
+
+    def _read_version_dir(self, vdir: str):
+        return self._read_files(vdir, self._load_schema(vdir))
 
     def _current_version(self) -> int:
         try:
@@ -185,21 +293,30 @@ class VersionedTable:
     def exists(self) -> bool:
         return self._current_version() > 0
 
+    def _read_at(self, v: int) -> DataFrame:
+        """Logical content of published version `v`."""
+        df = self._read_version_dir(self._vdir(v))
+        return df.drop("__bucket") if "__bucket" in df.columns else df
+
     def read(self) -> DataFrame:
         v = self._current_version()
         if v == 0:
             return self.spark.createDataFrame([], self.schema)
-        return self._read_version_dir(os.path.join(self.path, f"v_{v}"))
+        return self._read_at(v)
 
     def versions(self) -> list[int]:
-        """Version numbers still on disk (ascending)."""
+        """Published version numbers still on disk (ascending). A staged
+        dir above the pointer is not a version until it is published."""
+        cur = self._current_version()
         out = []
         for name in os.listdir(self.path):
             if name.startswith("v_"):
                 try:
-                    out.append(int(name[2:]))
+                    ver = int(name[2:])
                 except ValueError:
-                    pass
+                    continue
+                if ver <= cur:
+                    out.append(ver)
         return sorted(out)
 
     def read_version(self, version: int) -> DataFrame:
@@ -212,42 +329,30 @@ class VersionedTable:
                 f"version {version} not retained (have {self.versions()}; "
                 f"raise keep_versions on writes to retain more)"
             )
-        df = self._read_version_dir(os.path.join(self.path, f"v_{version}"))
-        return df.drop("__bucket") if "__bucket" in df.columns else df
+        return self._read_at(version)
+
+    def _frame(self, df: DataFrame) -> DataFrame:
+        """Rows as the commit's Spark job writes them."""
+        return df
 
     def overwrite(self, df: DataFrame, keep_versions: int = 2) -> None:
-        v = self._current_version() + 1
-        out = os.path.join(self.path, f"v_{v}")
-        df.write.mode("overwrite").parquet(out)
-        self._save_schema(out, df.schema)
-        with open(self._pointer(), "w") as f:
-            f.write(str(v))
-        self.vacuum(keep_versions)
+        _commit([(self, df)], keep_versions)
 
     def vacuum(self, keep_versions: int = 2) -> None:
         """Drop versions older than the newest `keep_versions` (storage
         hygiene — at 100 TB stale versions are real money; keeping one
         prior version preserves reader-in-flight safety for this
         single-writer design)."""
-        import shutil
-
         cur = self._current_version()
-        for name in os.listdir(self.path):
-            if name.startswith("v_"):
-                try:
-                    ver = int(name[2:])
-                except ValueError:
-                    continue
-                if ver <= cur - keep_versions:
-                    shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+        for ver in self.versions():
+            if ver <= cur - keep_versions:
+                shutil.rmtree(self._vdir(ver), ignore_errors=True)
 
     def append(self, df: DataFrame) -> None:
         cur = self.read()
         self.overwrite(cur.unionByName(df, allowMissingColumns=True))
 
     def drop(self) -> None:
-        import shutil
-
         shutil.rmtree(self.path, ignore_errors=True)
 
 
@@ -260,6 +365,8 @@ class BucketedVersionedTable(VersionedTable):
     At 100 TB this is the difference between O(batch) and O(table) per
     upsert; swapping the backend for real Delta MERGE stays one file.
     """
+
+    _part_cols = ("__bucket",)
 
     def __init__(self, spark: SparkSession, path: str, schema: str,
                  key: str = "source_uuid", n_buckets: int = 32):
@@ -290,7 +397,7 @@ class BucketedVersionedTable(VersionedTable):
             F.pmod(F.xxhash64(self._key_col()), F.lit(self.n_buckets)).cast("int"),
         )
 
-    def _clustered(self, df: DataFrame) -> DataFrame:
+    def _frame(self, df: DataFrame) -> DataFrame:
         """Cluster rows by bucket before a partitionBy write: without
         this every shuffle partition writes a sliver into every bucket
         dir (N_partitions × N_buckets tiny files + that many commit
@@ -316,9 +423,9 @@ class BucketedVersionedTable(VersionedTable):
         v = self._current_version()
         if v == 0:
             return False
-        vdir = os.path.join(self.path, f"v_{v}")
         try:
-            return any(n.startswith("__bucket=") for n in os.listdir(vdir))
+            return any(n.startswith("__bucket=")
+                       for n in os.listdir(self._vdir(v)))
         except FileNotFoundError:
             return False
 
@@ -337,42 +444,25 @@ class BucketedVersionedTable(VersionedTable):
     # caller can trigger compaction (a plain overwrite) before the
     # read-side anti-join grows past its budget.
 
-    def _vdir(self, v: int) -> str:
-        return os.path.join(self.path, f"v_{v}")
-
-    def _extra(self, vdir: str, name: str):
-        p = os.path.join(vdir, name)
+    def _delta_at(self, vdir: str):
+        """The version's `_delta` rows (None if it has none), read with
+        the delta schema recorded at write — no inference job."""
+        p = os.path.join(vdir, "_delta")
         if not os.path.isdir(p):
             return None
-        # sidecar stores have known write-time schemas too — skip the
-        # per-read schema-inference job (tombstones are always a
-        # 1-column string file; the delta schema is recorded at write)
-        if name == "_tombstones":
-            return self.spark.read.schema("__key string").parquet(p)
-        if name == "_delta":
-            sch = self._load_schema(vdir, key="delta")
-            if sch is not None:
-                return self.spark.read.schema(sch).parquet(p)
-        return self.spark.read.parquet(p)
+        return self._read_files(p, self._load_schema(vdir, key="delta"))
 
     def stats(self) -> dict:
-        import json
-
-        v = self._current_version()
-        try:
-            with open(os.path.join(self._vdir(v), "_stats.json")) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return {}
+        return _read_json(
+            os.path.join(self._vdir(self._current_version()), "_stats.json")
+        )
 
     def write_stats(self, **kw) -> None:
-        import json
-
         v = self._current_version()
         if v == 0:
             return
-        with open(os.path.join(self._vdir(v), "_stats.json"), "w") as f:
-            json.dump(kw, f)
+        atomic_write(os.path.join(self._vdir(v), "_stats.json"),
+                     json.dumps(kw))
 
     # literal-tombstone cutover: below this many keys the read-side
     # anti-join becomes a codegen NOT-IN filter (no broadcast-exchange
@@ -382,7 +472,7 @@ class BucketedVersionedTable(VersionedTable):
     def _tomb_filter(self, out: DataFrame, vdir: str):
         """Anti-filter `out` by this version's tombstone keys.
 
-        Tombstones are driver-written (delta_overwrite's pyarrow path)
+        Tombstones are driver-written (the commit's pyarrow path)
         and bounded by the compaction threshold, so for small sets the
         keys are read back driver-side and applied as a literal
         `isNull() | ~isin(keys)` predicate — pure codegen, zero
@@ -406,58 +496,37 @@ class BucketedVersionedTable(VersionedTable):
                 pq.read_metadata(os.path.join(tomb_dir, f)).num_rows
                 for f in files
             ) <= self._TOMB_LITERAL_MAX:
-                keys = []
-                for f in files:
-                    keys.extend(
-                        pq.read_table(
-                            os.path.join(tomb_dir, f), columns=["__key"]
-                        ).column("__key").to_pylist()
-                    )
-        except Exception:
-            keys = None
+                keys = _read_keys(tomb_dir)
+        except (OSError, ValueError, KeyError) as e:
+            _warn_once(
+                "tomb_filter",
+                "tombstones under %s unreadable driver-side (%s); reads "
+                "fall back to the broadcast anti-join",
+                tomb_dir, e,
+            )
         if keys is not None:
             # NULL tombstone keys are a no-op under left_anti (NULL
             # never equals any key) — drop them rather than crash
             # sorted() with a None (VERDICT r9 next #7)
-            keys = [k for k in keys if k is not None]
+            keys.discard(None)
             if not keys:
                 return out
-            return _filter_keys_not_in(
-                out, self._key_col(), sorted(set(keys))
-            )
+            return _filter_keys_not_in(out, self._key_col(), sorted(keys))
         tomb = self.spark.read.schema("__key string").parquet(tomb_dir)
         return out.join(tomb, self._key_col() == F.col("__key"), "left_anti")
 
-    def _apply_delta(self, base: DataFrame, vdir: str) -> DataFrame:
-        delta = self._extra(vdir, "_delta")
-        out = self._tomb_filter(base, vdir)
+    def _read_at(self, v: int) -> DataFrame:
+        """Delta-aware (ADVICE r7): a plain parquet scan of a delta
+        version sees only the hardlinked bucket files (underscore-
+        prefixed `_delta`/`_tombstones` are invisible to Spark's
+        listing), so delta rows would be missing and tombstoned rows
+        would resurface. Apply the version's own delta/tombstones."""
+        vdir = self._vdir(v)
+        out = self._tomb_filter(self._read_version_dir(vdir), vdir)
+        delta = self._delta_at(vdir)
         if delta is not None:
             out = out.unionByName(delta.select(*out.columns))
-        return out
-
-    def read(self) -> DataFrame:
-        v = self._current_version()
-        if v == 0:
-            return self.spark.createDataFrame([], self.schema)
-        vdir = self._vdir(v)
-        df = self._apply_delta(self._read_version_dir(vdir), vdir)
-        return df.drop("__bucket") if "__bucket" in df.columns else df
-
-    def read_version(self, version: int) -> DataFrame:
-        """Time-travel read that is delta-aware (ADVICE r7): a plain
-        parquet scan of a delta version sees only the hardlinked
-        bucket files (underscore-prefixed `_delta`/`_tombstones` are
-        invisible to Spark's listing), so delta rows would be missing
-        and tombstoned rows would resurface. Apply the version's own
-        delta/tombstones, exactly like read()."""
-        if version not in self.versions():
-            raise ValueError(
-                f"version {version} not retained (have {self.versions()}; "
-                f"raise keep_versions on writes to retain more)"
-            )
-        vdir = self._vdir(version)
-        df = self._apply_delta(self._read_version_dir(vdir), vdir)
-        return df.drop("__bucket") if "__bucket" in df.columns else df
+        return out.drop("__bucket") if "__bucket" in out.columns else out
 
     def read_buckets(self, buckets: list[int]) -> DataFrame:
         """Scan only the requested buckets — partition pruning at file
@@ -473,181 +542,54 @@ class BucketedVersionedTable(VersionedTable):
         bl = [int(b) for b in buckets]
         df = self._read_version_dir(vdir).filter(F.col("__bucket").isin(bl))
         df = self._tomb_filter(df, vdir)
-        delta = self._extra(vdir, "_delta")
+        delta = self._delta_at(vdir)
         if delta is not None:
             df = df.unionByName(
                 delta.filter(F.col("__bucket").isin(bl)).select(*df.columns)
             )
         return df.drop("__bucket")
 
-    def _link_buckets(self, prev: str, out: str, skip: set | None = None):
-        import shutil
-
-        for name in os.listdir(prev):
-            if not name.startswith("__bucket="):
-                continue
-            if skip and int(name.split("=", 1)[1]) in skip:
-                continue
-            src, dst = os.path.join(prev, name), os.path.join(out, name)
-            os.makedirs(dst, exist_ok=True)
-            for fn in os.listdir(src):
-                if not fn.endswith(".parquet"):
-                    continue
-                try:
-                    os.link(os.path.join(src, fn), os.path.join(dst, fn))
-                except OSError:
-                    shutil.copy2(os.path.join(src, fn), os.path.join(dst, fn))
-
-    def delta_overwrite(self, new_rows: DataFrame, replaced_keys: DataFrame,
-                        keep_versions: int = 2,
-                        tomb_hint: int | None = None,
-                        tomb_link: str | None = None) -> str:
-        """New version = every base bucket hardlinked + compacted delta
-        + accumulated tombstones. `replaced_keys` is a 1-column DF of
-        key values whose base rows are dead (their replacement rows, if
-        any, are in `new_rows`).
-
-        `tomb_hint` (an upper bound on the accumulated tombstone count,
-        e.g. previous stats + batch size) skips the exact count job.
-        `tomb_link` hardlinks an already-written _tombstones dir from a
-        SIBLING table whose tombstone history is identical (a field's
-        chunks/embeddings/tsvectors always sync together), skipping the
-        union+write entirely. Returns this version's _tombstones path
-        so siblings can link it."""
-        import json
-        import shutil
-
+    def _compacted_delta(self, prev: str, new_rows: DataFrame,
+                         batch: list[str]) -> DataFrame:
+        """The previous version's `_delta` minus rows of this batch's
+        keys, union the batch's new rows. Compaction uses the BATCH
+        keys only: anti-joining against the accumulated tombstones
+        would drop earlier syncs' still-live delta rows (their keys are
+        tombstoned for the BASE, not for the delta). Small batches
+        compact via a literal NOT-IN filter — no broadcast-exchange
+        job per delta write (guide §2.4; same cutover as the read-side
+        literal tombstones)."""
         from pyspark.sql import functions as F
 
-        cur = self._current_version()
-        if cur == 0:
-            raise ValueError("delta_overwrite needs an existing version")
-        prev, v = self._vdir(cur), cur + 1
-        out = self._vdir(v)
-        os.makedirs(out, exist_ok=True)
-        tomb_dir = os.path.join(out, "_tombstones")
-        n_tomb = None
-        # both bound on EVERY branch: the DataFrame-keys path left
-        # batch_lits unbound, raising UnboundLocalError at the delta
-        # compaction below whenever the previous version carried a
-        # _delta (ADVICE r9 #1)
-        keys = batch_lits = None
-        if isinstance(replaced_keys, (list, tuple, set)):
-            # driver-side tombstone accumulation: the key set is
-            # bounded by the compaction threshold, so union+write via
-            # pyarrow costs ZERO Spark jobs and yields an exact count.
-            # The delta-compaction anti-join below uses the BATCH keys
-            # only — anti-joining against the accumulated set would
-            # drop earlier syncs' still-live delta rows (their keys
-            # are tombstoned for the BASE, not for the delta).
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            # a None key is a left_anti no-op — drop it rather than
-            # tombstone the string 'None' (VERDICT r9 next #7)
-            batch = sorted({str(k) for k in replaced_keys if k is not None})
-            key_set = set(batch)
-            prev_tomb = os.path.join(prev, "_tombstones")
-            if os.path.isdir(prev_tomb):
-                for fn in os.listdir(prev_tomb):
-                    if fn.endswith(".parquet"):
-                        key_set.update(
-                            pq.read_table(
-                                os.path.join(prev_tomb, fn)
-                            ).column("__key").to_pylist()
-                        )
-            n_tomb = len(key_set)
-            # small driver-known batches: the delta-compaction
-            # anti-join below becomes a literal NOT-isin filter
-            # (keys=None, batch_lits set) — no broadcast-exchange
-            # stage job per delta write (guide §2.4; same cutover as
-            # the read-side literal tombstones). NULL semantics match
-            # left_anti via the isNull() escape in the filter.
-            if batch and len(batch) <= self._TOMB_LITERAL_MAX:
-                batch_lits = batch
-            elif batch:
-                keys = self.spark.createDataFrame(
-                    [(k,) for k in batch], "__key string"
-                )
-            if tomb_link is None:
-                os.makedirs(tomb_dir, exist_ok=True)
-                pq.write_table(
-                    pa.table({"__key": pa.array(sorted(key_set),
-                                                pa.string())}),
-                    os.path.join(tomb_dir, "part-00000.parquet"),
-                )
-        else:
-            keys = replaced_keys.select(
-                F.col(replaced_keys.columns[0]).cast("string").alias("__key")
-            ).distinct()
-        if tomb_link is not None:
-            os.makedirs(tomb_dir, exist_ok=True)
-            for fn in os.listdir(tomb_link):
-                src = os.path.join(tomb_link, fn)
-                if not os.path.isfile(src):
-                    continue
-                try:
-                    os.link(src, os.path.join(tomb_dir, fn))
-                except OSError:
-                    shutil.copy2(src, os.path.join(tomb_dir, fn))
-        elif not isinstance(replaced_keys, (list, tuple, set)):
-            old_tomb = self._extra(prev, "_tombstones")
-            tomb = (
-                keys if old_tomb is None
-                else old_tomb.unionByName(keys).distinct()
-            )
-            tomb.coalesce(1).write.mode("overwrite").parquet(tomb_dir)
-            if tomb_hint is None:
-                n_tomb = self.spark.read.parquet(tomb_dir).count()
         delta = self._bucketed(new_rows)
-        old_delta = self._extra(prev, "_delta")
-        if old_delta is not None and batch_lits is not None:
-            surviving = _filter_keys_not_in(
-                old_delta, self._key_col(), batch_lits
+        old = self._delta_at(prev)
+        if old is None:
+            return delta
+        if batch and len(batch) <= self._TOMB_LITERAL_MAX:
+            old = _filter_keys_not_in(old, self._key_col(), batch)
+        elif batch:
+            keys = self.spark.createDataFrame(
+                [(k,) for k in batch], "__key string"
             )
-            delta = surviving.unionByName(delta.select(*surviving.columns))
-        elif old_delta is not None and keys is not None:
-            surviving = old_delta.join(
-                keys, self._key_col() == F.col("__key"), "left_anti"
-            )
-            delta = surviving.unionByName(delta.select(*surviving.columns))
-        elif old_delta is not None:
-            delta = old_delta.unionByName(delta.select(*old_delta.columns))
-        delta.coalesce(4).write.mode("overwrite").parquet(
-            os.path.join(out, "_delta")
-        )
-        # version files are the prev version's (hardlinked) — carry its
-        # recorded schema; record this delta's own schema alongside
-        self._save_schema(out, self._load_schema(prev),
-                          delta_schema=delta.schema)
-        self._link_buckets(prev, out)
-        st = {}
-        try:
-            with open(os.path.join(prev, "_stats.json")) as f:
-                st = json.load(f)
-        except (FileNotFoundError, ValueError):
-            pass
-        st["tomb_rows"] = int(
-            n_tomb if n_tomb is not None
-            else (tomb_hint if tomb_hint is not None
-                  else st.get("tomb_rows", 0))
-        )
-        with open(os.path.join(out, "_stats.json"), "w") as f:
-            json.dump(st, f)
-        with open(self._pointer(), "w") as f:
-            f.write(str(v))
-        self.vacuum(keep_versions)
-        return tomb_dir
+            old = old.join(keys, self._key_col() == F.col("__key"),
+                           "left_anti")
+        return old.unionByName(delta.select(*old.columns))
+
+    def delta_overwrite(self, new_rows: DataFrame, replaced_keys,
+                        keep_versions: int = 2) -> str:
+        """New version = every base bucket hardlinked + compacted delta
+        + accumulated tombstones. `replaced_keys` is a driver-side
+        collection of key values whose base rows are dead (their
+        replacement rows, if any, are in `new_rows`). Returns this
+        version's _tombstones path."""
+        vdir = _commit([(self, new_rows)], keep_versions,
+                       replaced_keys=replaced_keys)[0]
+        return os.path.join(vdir, "_tombstones")
 
     def overwrite(self, df: DataFrame, keep_versions: int = 2) -> None:
-        v = self._current_version() + 1
-        out = os.path.join(self.path, f"v_{v}")
-        clustered = self._clustered(df)
-        clustered.write.mode("overwrite").partitionBy("__bucket").parquet(out)
-        self._save_schema(out, clustered.schema)
-        with open(self._pointer(), "w") as f:
-            f.write(str(v))
-        self.vacuum(keep_versions)
+        # its own attribute (not inherited) so per-class tracing
+        # (perfbench/layers.py) can wrap the bucketed entry point
+        _commit([(self, df)], keep_versions)
 
     def partial_overwrite(self, touched_df: DataFrame, touched: list[int],
                           keep_versions: int = 2) -> None:
@@ -657,115 +599,24 @@ class BucketedVersionedTable(VersionedTable):
         which delta rows belong to it) — a table is maintained through
         EITHER partial_overwrite (documents) or delta_overwrite
         (pipeline derived tables), never both."""
-        import shutil
-
-        cur = self._current_version()
-        if cur and os.path.isdir(os.path.join(self._vdir(cur), "_delta")):
-            raise ValueError(
-                "partial_overwrite on a delta version would drop the "
-                "delta; compact first (overwrite(self.read()))"
-            )
-        v = cur + 1
-        out = os.path.join(self.path, f"v_{v}")
-        clustered = self._clustered(touched_df)
-        clustered.write.mode("overwrite").partitionBy("__bucket").parquet(out)
-        self._save_schema(out, clustered.schema)
-        touched_set = {int(b) for b in touched}
-        if cur:
-            prev = os.path.join(self.path, f"v_{cur}")
-            for name in os.listdir(prev):
-                if not name.startswith("__bucket="):
-                    continue
-                if int(name.split("=", 1)[1]) in touched_set:
-                    continue
-                src, dst = os.path.join(prev, name), os.path.join(out, name)
-                os.makedirs(dst, exist_ok=True)
-                for fn in os.listdir(src):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    try:
-                        os.link(os.path.join(src, fn), os.path.join(dst, fn))
-                    except OSError:
-                        shutil.copy2(os.path.join(src, fn), os.path.join(dst, fn))
-        with open(self._pointer(), "w") as f:
-            f.write(str(v))
-        self.vacuum(keep_versions)
+        _commit([(self, touched_df)], keep_versions,
+                touched={int(b) for b in touched})
 
 
 def overwrite_multi(
     entries: list[tuple["BucketedVersionedTable", DataFrame]],
     keep_versions: int = 2,
 ) -> None:
-    """ONE Spark job overwrites SEVERAL BucketedVersionedTables whose
-    rows share one bucket assignment (a pipeline field's chunks/
-    embeddings/tsvectors — VERDICT r9 next #3): the frames union under
-    a __table discriminator, one repartition clusters every table's
-    rows by bucket, and one partitionBy(__table, __bucket) write
-    yields per-table/per-bucket file sets; the driver then MOVES each
-    `__table=i/__bucket=k` dir into that table's new version dir, so
-    the on-disk layout readers see is exactly a solo overwrite's.
-
-    The full-sync path paid one write action per table (3 jobs; r9
-    overlapped them on a thread pool, which still schedules 3 jobs and
-    opened the partial-failure version-skew window of ADVICE r9 #2 —
-    gone here: one job either writes every table's files or none,
-    and the pointer flips afterward, driver-side). Files carry the
-    UNION schema (absent sibling columns all-NULL — parquet nulls are
-    ~free); each table's `_schema.json` records its own subset, which
-    Spark's reader projects without touching sibling columns."""
-    if len(entries) == 1:
-        tbl, df = entries[0]
-        tbl.overwrite(df, keep_versions=keep_versions)
-        return
-    import shutil
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    first = entries[0][0]
-    tagged = None
-    schemas = []
-    for i, (tbl, df) in enumerate(entries):
-        # PER-TABLE clustering (same _clustered repartition the solo
-        # overwrite uses), THEN the narrow union: a union-level
-        # repartition(nb, __bucket) reduced the whole 3-table write to
-        # nb tasks — parquet encoding for every table serialized into
-        # a third of r9's aggregate width (full_resync measured 16%
-        # slower). With per-branch clustering the single job runs all
-        # 3×nb write tasks at once and each task holds exactly one
-        # (table, bucket) — one file per bucket dir, the same layout
-        # and shuffle bytes as three solo writes.
-        b = tbl._clustered(df)
-        schemas.append(b.schema)
-        t = b.withColumn("__table", F.lit(i))
-        tagged = t if tagged is None else tagged.unionByName(
-            t, allowMissingColumns=True
-        )
-    clustered = tagged
-    tmp = os.path.join(
-        os.path.dirname(first.path.rstrip("/")),
-        f".multi_write_{_uuid.uuid4().hex[:8]}",
-    )
-    try:
-        clustered.write.mode("overwrite").partitionBy(
-            "__table", "__bucket"
-        ).parquet(tmp)
-        for i, (tbl, _) in enumerate(entries):
-            v = tbl._current_version() + 1
-            out = tbl._vdir(v)
-            os.makedirs(out, exist_ok=True)
-            src = os.path.join(tmp, f"__table={i}")
-            if os.path.isdir(src):
-                for bd in os.listdir(src):
-                    if bd.startswith("__bucket="):
-                        os.rename(os.path.join(src, bd),
-                                  os.path.join(out, bd))
-            tbl._save_schema(out, schemas[i])
-            with open(tbl._pointer(), "w") as f:
-                f.write(str(v))
-            tbl.vacuum(keep_versions)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Full overwrite of SEVERAL BucketedVersionedTables whose rows
+    share one bucket assignment (a pipeline field's chunks/embeddings/
+    tsvectors — VERDICT r9 next #3) in ONE Spark job and one publish
+    step. Files carry the UNION schema (absent sibling columns
+    all-NULL — parquet nulls are ~free); each table's `_schema.json`
+    records its own subset, which Spark's reader projects without
+    touching sibling columns. Pointers still move one table at a time
+    (see the module docstring), so a reader can briefly see the tables
+    at different versions."""
+    _commit(entries, keep_versions)
 
 
 def delta_overwrite_multi(
@@ -773,150 +624,126 @@ def delta_overwrite_multi(
     replaced_keys,
     keep_versions: int = 2,
 ) -> str:
-    """ONE Spark job writes SEVERAL tables' compacted deltas (the
-    incremental-sync counterpart of overwrite_multi — VERDICT r9
-    next #3): per-table surviving-old-delta ∪ new-rows frames union
-    under a __table discriminator and one write lands them all; the
-    driver moves each table's files into its `_delta`, writes the
-    accumulated tombstones ONCE via pyarrow (zero jobs) and hardlinks
-    them to the siblings — a field's derived tables share one
-    tombstone history by construction, the same contract tomb_link
-    encoded. Returns the first table's _tombstones dir (API parity
-    with delta_overwrite). `replaced_keys` must be a driver-side
-    key collection here (the incremental-sync path's form)."""
-    if len(entries) == 1:
-        tbl, df = entries[0]
-        return tbl.delta_overwrite(df, replaced_keys,
-                                   keep_versions=keep_versions)
-    import json
-    import shutil
-    import uuid as _uuid
+    """Delta write of SEVERAL tables in ONE Spark job (the incremental-
+    sync counterpart of overwrite_multi). A field's derived tables
+    share one tombstone history: the union of every table's previous
+    tombstones and this batch's keys is written once driver-side
+    (pyarrow, zero jobs) and hardlinked into each table. Returns the
+    first table's _tombstones dir."""
+    published = _commit(entries, keep_versions, replaced_keys=replaced_keys)
+    return os.path.join(published[0], "_tombstones")
 
+
+def _commit(entries, keep_versions: int = 2, *, touched: set | None = None,
+            replaced_keys=None) -> list[str]:
+    """The one versioned write: stage → publish → vacuum (module
+    docstring) for every (table, frame) in `entries`. Kind of write:
+
+    - full overwrite: `touched` and `replaced_keys` both None;
+    - bucket-partial: `touched` = bucket ids the frames rewrite, every
+      other bucket of the previous version is hardlinked;
+    - delta: `replaced_keys` = keys whose base rows are dead, every
+      previous bucket is hardlinked and the frames become `_delta`.
+
+    Returns the published version dirs, in `entries` order."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from pyspark.sql import functions as F
 
-    first = entries[0][0]
-    spark = first.spark
-    batch = sorted({str(k) for k in replaced_keys if k is not None})
-    prevs, outs, vers, deltas, delta_schemas = [], [], [], [], []
-    for tbl, new_rows in entries:
+    delta = replaced_keys is not None
+    batch = (sorted({str(k) for k in replaced_keys if k is not None})
+             if delta else None)
+    plans, frames = [], []
+    for tbl, df in entries:
         cur = tbl._current_version()
-        if cur == 0:
-            raise ValueError("delta_overwrite needs an existing version")
-        prev, out = tbl._vdir(cur), tbl._vdir(cur + 1)
-        vers.append(cur + 1)
-        os.makedirs(out, exist_ok=True)
-        delta = tbl._bucketed(new_rows)
-        old_delta = tbl._extra(prev, "_delta")
-        # compaction against the BATCH keys only (earlier syncs'
-        # still-live delta rows must survive) — literal NOT-isin below
-        # the same cutover as delta_overwrite (guide §2.4)
-        if old_delta is not None and batch and (
-            len(batch) <= tbl._TOMB_LITERAL_MAX
-        ):
-            surviving = _filter_keys_not_in(
-                old_delta, tbl._key_col(), batch
-            )
-            delta = surviving.unionByName(delta.select(*surviving.columns))
-        elif old_delta is not None and batch:
-            keys = spark.createDataFrame(
-                [(k,) for k in batch], "__key string"
-            )
-            surviving = old_delta.join(
-                keys, tbl._key_col() == F.col("__key"), "left_anti"
-            )
-            delta = surviving.unionByName(delta.select(*surviving.columns))
-        elif old_delta is not None:
-            delta = old_delta.unionByName(delta.select(*old_delta.columns))
-        prevs.append(prev)
-        outs.append(out)
-        deltas.append(delta)
-        delta_schemas.append(delta.schema)
+        prev = tbl._vdir(cur) if cur else None
+        if delta:
+            if not cur:
+                raise ValueError("delta_overwrite needs an existing version")
+            # PER-BRANCH coalesce(4), before the union: a union-level
+            # coalesce(4) collapsed the WHOLE upstream into 4 tasks
+            # (measured 25% slower at the 100k-doc/1% sync); union is
+            # NARROW, so each table keeps write width 4 and the one job
+            # runs every table's tasks at once, with no shuffle
+            # (OPTIMIZATION_r10.md multi-write)
+            frame = tbl._compacted_delta(prev, df, batch).coalesce(4)
+            schemas = (tbl._load_schema(prev), frame.schema)
+        else:
+            if touched is not None and prev and os.path.isdir(
+                os.path.join(prev, "_delta")
+            ):
+                raise ValueError(
+                    "partial_overwrite on a delta version would drop the "
+                    "delta; compact first (overwrite(self.read()))"
+                )
+            # PER-TABLE clustering, THEN the narrow union: a union-level
+            # repartition reduced a 3-table write to n_buckets tasks
+            # (full_resync measured 16% slower); per branch, each task
+            # holds one (table, bucket) — one file per bucket dir
+            frame = tbl._frame(df)
+            schemas = (frame.schema, None)
+        plans.append((tbl, cur + 1, prev, schemas))
+        frames.append(frame)
     tagged = None
-    for i, d in enumerate(deltas):
-        # PER-BRANCH coalesce(4), before the union: a union-level
-        # coalesce(4) collapsed the WHOLE upstream (persisted-chunk
-        # scan, embed UDF, every table's surviving-delta read) into 4
-        # tasks — measured 25% slower than r9's 3 thread-pooled
-        # per-table writes at the 100k-doc/1% sync; a union-level
-        # round-robin repartition recovered only half (it shuffles the
-        # 1024-dim embedding rows). Union is NARROW, so per-branch
-        # coalesce keeps each table's write width at exactly r9's
-        # per-job width (4), the single job runs all 3×4 tasks
-        # at once, every task holds one table's rows (same per-table
-        # file count as before), and there is no shuffle
-        # (OPTIMIZATION_r10.md multi-write).
-        t = d.coalesce(4).withColumn("__table", F.lit(i))
+    for i, frame in enumerate(frames):
+        t = frame.withColumn("__table", F.lit(i))
         tagged = t if tagged is None else tagged.unionByName(
             t, allowMissingColumns=True
         )
-    tmp = os.path.join(
-        os.path.dirname(first.path.rstrip("/")),
-        f".multi_delta_{_uuid.uuid4().hex[:8]}",
-    )
+    first = entries[0][0]
+    part_cols = () if delta else first._part_cols
+    stage = os.path.join(first.path, f".commit_{uuid.uuid4().hex[:8]}")
     try:
-        tagged.write.mode("overwrite").partitionBy("__table").parquet(tmp)
-        # accumulated tombstones: driver-side union+write once (zero
-        # Spark jobs, exact count), hardlinked into every sibling
-        key_set = set(batch)
-        prev_tomb = os.path.join(prevs[0], "_tombstones")
-        if os.path.isdir(prev_tomb):
-            for fn in os.listdir(prev_tomb):
-                if fn.endswith(".parquet"):
-                    key_set.update(
-                        pq.read_table(
-                            os.path.join(prev_tomb, fn)
-                        ).column("__key").to_pylist()
-                    )
-        key_set.discard(None)
-        n_tomb = len(key_set)
-        tomb0 = os.path.join(outs[0], "_tombstones")
-        os.makedirs(tomb0, exist_ok=True)
-        pq.write_table(
-            pa.table({"__key": pa.array(sorted(key_set), pa.string())}),
-            os.path.join(tomb0, "part-00000.parquet"),
-        )
-        for i, (tbl, _) in enumerate(entries):
-            out, prev = outs[i], prevs[i]
-            ddir = os.path.join(out, "_delta")
-            os.makedirs(ddir, exist_ok=True)
-            src = os.path.join(tmp, f"__table={i}")
-            if os.path.isdir(src):
-                for fn in os.listdir(src):
-                    if fn.endswith(".parquet"):
-                        os.rename(os.path.join(src, fn),
-                                  os.path.join(ddir, fn))
-            if i > 0:
-                tdir = os.path.join(out, "_tombstones")
-                os.makedirs(tdir, exist_ok=True)
-                for fn in os.listdir(tomb0):
-                    s = os.path.join(tomb0, fn)
-                    if not os.path.isfile(s):
-                        continue
-                    try:
-                        os.link(s, os.path.join(tdir, fn))
-                    except OSError:
-                        shutil.copy2(s, os.path.join(tdir, fn))
-            tbl._save_schema(out, tbl._load_schema(prev),
-                             delta_schema=delta_schemas[i])
-            tbl._link_buckets(prev, out)
-            st = {}
-            try:
-                with open(os.path.join(prev, "_stats.json")) as f:
-                    st = json.load(f)
-            except (FileNotFoundError, ValueError):
-                pass
-            st["tomb_rows"] = int(n_tomb)
-            with open(os.path.join(out, "_stats.json"), "w") as f:
-                json.dump(st, f)
-            with open(tbl._pointer(), "w") as f:
-                f.write(str(vers[i]))
-            tbl.vacuum(keep_versions)
+        # 1. stage: one Spark job for every table's new files ...
+        tagged.write.mode("overwrite").partitionBy(
+            "__table", *part_cols
+        ).parquet(stage)
+        if delta:
+            keys = set(batch)
+            for _, _, prev, _ in plans:
+                keys |= _read_keys(os.path.join(prev, "_tombstones"))
+            keys.discard(None)
+            tomb = os.path.join(stage, "_tombstones")
+            os.makedirs(tomb)
+            pq.write_table(
+                pa.table({"__key": pa.array(sorted(keys), pa.string())}),
+                os.path.join(tomb, "part-00000.parquet"),
+            )
+        # ... then each table's next version, built around them
+        for i, (tbl, v, prev, (files_schema, delta_schema)) in enumerate(plans):
+            out = tbl._vdir(v)
+            shutil.rmtree(out, ignore_errors=True)  # unpublished leftover
+            dst = os.path.join(out, "_delta") if delta else out
+            os.makedirs(dst)
+            src = os.path.join(stage, f"__table={i}")
+            for name in os.listdir(src) if os.path.isdir(src) else ():
+                if name.startswith("__bucket=") or name.endswith(".parquet"):
+                    os.rename(os.path.join(src, name),
+                              os.path.join(dst, name))
+            if prev and (delta or touched is not None):
+                for name in os.listdir(prev):
+                    if name.startswith("__bucket=") and (
+                        delta or int(name.split("=", 1)[1]) not in touched
+                    ):
+                        _link_files(os.path.join(prev, name),
+                                    os.path.join(out, name))
+            if delta:
+                _link_files(tomb, os.path.join(out, "_tombstones"))
+                st = _read_json(os.path.join(prev, "_stats.json"))
+                st["tomb_rows"] = len(keys)
+                atomic_write(os.path.join(out, "_stats.json"),
+                             json.dumps(st))
+            tbl._save_schema(out, files_schema, delta_schema=delta_schema)
+        # 2. publish, only once every table is staged
+        for tbl, v, _, _ in plans:
+            atomic_write(tbl._pointer(), str(v))
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return tomb0
+        shutil.rmtree(stage, ignore_errors=True)
+    # 3. vacuum
+    for tbl, _, _, _ in plans:
+        tbl.vacuum(keep_versions)
+    return [tbl._vdir(v) for tbl, v, _, _ in plans]
 
 
 def compact_parquet_dir(
@@ -947,7 +774,6 @@ def compact_parquet_dir(
     job would be a Delta OPTIMIZE.
     """
     import math
-    import shutil
 
     part_dirs = [
         e

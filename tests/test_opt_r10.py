@@ -61,9 +61,10 @@ def test_delta_overwrite_null_batch_key(spark, tmp_path):
 
 
 def test_delta_overwrite_dataframe_keys_over_existing_delta(spark, tmp_path):
-    """ADVICE r9 #1: replaced_keys as a DataFrame (the annotated type)
-    over a version that already carries a _delta must not raise
-    UnboundLocalError and must compact the old delta correctly."""
+    """ADVICE r9 #1: a second delta write over a version that already
+    carries a _delta must compact the old delta correctly. (The keys
+    were once passed as a DataFrame; replaced_keys is now always a
+    driver-side collection.)"""
     from postgresml_spark.collections.storage import BucketedVersionedTable
 
     tbl = BucketedVersionedTable(
@@ -76,11 +77,10 @@ def test_delta_overwrite_dataframe_keys_over_existing_delta(spark, tmp_path):
     tbl.delta_overwrite(
         spark.createDataFrame([(10, "k1")], "id long, k string"), ["k1"]
     )
-    # second delta via the DataFrame path (replaces k1 again + k2)
-    keys_df = spark.createDataFrame([("k1",), ("k2",)], "k string")
+    # second delta (replaces k1 again + k2)
     tbl.delta_overwrite(
         spark.createDataFrame([(11, "k1"), (12, "k2")], "id long, k string"),
-        keys_df,
+        ["k1", "k2"],
     )
     rows = {r["id"]: r["k"] for r in tbl.read().collect()}
     assert rows == {0: "k0", 3: "k3", 4: "k4", 5: "k5", 11: "k1", 12: "k2"}
@@ -275,12 +275,15 @@ def test_filter_keys_not_in_matches_isin_and_escapes(spark):
     """storage._filter_keys_not_in builds the key set as ONE parsed
     SQL IN (py4j round-trip per key removed — OPTIMIZATION_r10.md);
     it must match the isin form exactly, keep NULL keys (left_anti
-    parity), and survive keys containing quotes."""
+    parity), and survive keys containing quotes, backslashes (a key
+    ending in one must not escape the closing quote) and newlines."""
     from postgresml_spark.collections.storage import _filter_keys_not_in
 
-    rows = [("a",), ("b",), (None,), ("o'brien",), ("z",)]
+    rows = [("a",), ("b",), (None,), ("o'brien",), ("z",),
+            ("c\\d",), ("ends\\",), ("x\ny",), ("q\\'t",), ("u\\u0041",)]
     df = spark.createDataFrame(rows, "k string")
-    keys = ["b", "o'brien", "missing"]
+    keys = ["b", "o'brien", "missing", "c\\d", "ends\\", "x\ny",
+            "u\\u0041"]
     got = sorted(
         r["k"] or "<null>"
         for r in _filter_keys_not_in(df, F.col("k"), keys).collect()
@@ -291,13 +294,14 @@ def test_filter_keys_not_in_matches_isin_and_escapes(spark):
             F.col("k").isNull() | ~F.col("k").isin(keys)
         ).collect()
     )
-    assert got == want == ["<null>", "a", "z"]
+    assert got == want == ["<null>", "a", "q\\'t", "z"]
     # derived-key expression (the embeddings/tsvectors tables key on
     # an expression, not a named column)
     got2 = sorted(
         r["k"] or "<null>"
         for r in _filter_keys_not_in(
-            df, F.upper(F.col("k")), ["B", "Z"]
+            df, F.upper(F.col("k")), ["B", "Z", "ENDS\\"]
         ).collect()
     )
-    assert got2 == ["<null>", "a", "o'brien"]
+    assert got2 == ["<null>", "a", "c\\d", "o'brien", "q\\'t", "u\\u0041",
+                    "x\ny"]
