@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from postgresml_spark.collections.storage import (
     BucketedVersionedTable,
     VersionedTable,
+    _parquet_files,
     atomic_write,
 )
 from postgresml_spark.functions.embed import (
@@ -312,23 +313,6 @@ class Pipeline:
             k for k in (f"{field}_embeddings", f"{field}_tsvectors")
             if k in self._tables
         ]
-        # COLUMN CONTRACT (ADVICE r8 #4): every change-log partition
-        # carries at least (id, source_uuid, document); hardlinked
-        # initial partitions (_log_changes_linked) carry an EXTRA
-        # `version` column that later plain partitions lack. Readers
-        # must therefore select only the three contract columns and
-        # must NOT enable mergeSchema — Spark's sampled-schema
-        # inference is only safe because every selected column exists
-        # in every file. A mixed linked+plain read is regression-tested
-        # in tests/test_collections.py (mixed change-log schema test).
-        # explicit schema (the log's column contract): skips the
-        # per-sync schema-inference Spark job; the hardlinked initial
-        # partitions' extra `version` column is simply not selected
-        pend = spark.read.schema(
-            "id long, source_uuid string, document string, seq int"
-        ).parquet(self.collection._changes_path).filter(
-            F.col("seq") > F.lit(int(wm))
-        )
         # ZERO-job detection (guide §1.2): the pending log partitions
         # are known directories (seq > wm) of O(changed) rows the
         # driver just wrote — footer row counts decide the >100k
@@ -340,7 +324,7 @@ class Pipeline:
         # buckets here would be dead work (ADVICE r7). Column
         # contract (ADVICE r8 #4): only (id, document) are selected,
         # present in every log file, linked or plain.
-        pend_ids, pend_live = self._pend_census(wm, cap=100_000)
+        pend_files, pend_ids, pend_live = self._pend_census(wm, cap=100_000)
         if pend_ids is None:  # over the cap: rebuild, payloads unread
             self._sync_full(field, cfg, self.collection.documents.read(), out)
             self._set_watermark(field, docs_version)
@@ -351,6 +335,24 @@ class Pipeline:
                 out[k] = 0
             self._set_watermark(field, docs_version)
             return
+        # COLUMN CONTRACT (ADVICE r8 #4): every change-log partition
+        # carries at least (id, source_uuid, document); hardlinked
+        # initial partitions (_log_changes_linked) carry an EXTRA
+        # `version` column that later plain partitions lack. Readers
+        # must therefore select only the three contract columns and
+        # must NOT enable mergeSchema — Spark's sampled-schema
+        # inference is only safe because every selected column exists
+        # in every file. A mixed linked+plain read is regression-tested
+        # in tests/test_collections.py (mixed change-log schema test).
+        # The explicit schema skips the per-sync schema-inference job;
+        # the explicit pending-file list (with basePath, so the `seq`
+        # partition column survives) keeps Spark from listing the
+        # underscore-prefixed log dir, which it treats as hidden.
+        pend = spark.read.schema(
+            "id long, source_uuid string, document string, seq int"
+        ).option("basePath", self.collection._changes_path).parquet(
+            *pend_files
+        )
         touched_keys = [str(int(i)) for i in pend_ids]
         # ids are never reused, so an id with any NULL-payload row is
         # dead; live ids carry their payload in exactly one log row
@@ -399,9 +401,10 @@ class Pipeline:
 
     def _pend_census(self, wm: int, cap: int = 100_000):
         """Driver-side read of the pending change-log partitions
-        (seq > wm): returns (ids, live_flags) or (None, None) when the
-        footer row count exceeds `cap` (the full-rebuild bail — decided
-        from metadata alone, no payload bytes read). Zero Spark jobs."""
+        (seq > wm): returns (files, ids, live_flags), with ids and
+        flags None when the footer row count exceeds `cap` (the
+        full-rebuild bail — decided from metadata alone, no payload
+        bytes read). Zero Spark jobs."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -416,21 +419,17 @@ class Pipeline:
                 continue
             if seq <= wm:
                 continue
-            d = os.path.join(root, name)
-            files.extend(
-                os.path.join(d, f) for f in sorted(os.listdir(d))
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
+            files.extend(_parquet_files(os.path.join(root, name)))
         total = sum(pq.read_metadata(f).num_rows for f in files)
         if total > cap:
-            return None, None
+            return files, None, None
         ids: list[int] = []
         live: list[bool] = []
         for f in files:
             t = pq.read_table(f, columns=["id", "document"])
             ids.extend(t.column("id").to_pylist())
             live.extend(pc.is_valid(t.column("document")).to_pylist())
-        return ids, live
+        return files, ids, live
 
     @staticmethod
     def _count_delta_batch_rows(delta_dir: str, touched_keys: list[str]) -> int:
@@ -443,12 +442,8 @@ class Pipeline:
 
         keys = {int(k) for k in touched_keys}
         n = 0
-        for fn in sorted(os.listdir(delta_dir)):
-            if not fn.endswith(".parquet"):
-                continue
-            col = pq.read_table(
-                os.path.join(delta_dir, fn), columns=["document_id"]
-            ).column("document_id")
+        for f in _parquet_files(delta_dir):
+            col = pq.read_table(f, columns=["document_id"]).column("document_id")
             for v in col.to_pylist():
                 if v in keys:
                     n += 1
@@ -578,8 +573,9 @@ class Pipeline:
                 else ServedPipelineIndex(self.collection, self, field)
             )
         elif idx.is_stale():
-            # append-only deltas insert into the live graph (O(batch));
-            # changed/removed chunks rebuild (serving.py refresh())
+            # the sync's delta applies in place (O(batch), no Spark
+            # job); a moved base (resync, compaction) rebuilds
+            # (serving.py refresh())
             idx = idx.refresh()
         self._served[field] = idx
         return idx

@@ -18,7 +18,7 @@ Postgres-the-store from pgvector-the-index:
 - The serving process HOLDS: a ResidentHNSW graph over chunk
   embeddings (operators/similarity.py) plus the chunk→document payload
   maps, versioned against the underlying VersionedTables so a sync
-  invalidates the index exactly like the reference's index stays
+  reaches the index exactly like the reference's index stays
   consistent under trigger-maintained inserts.
 - Queries NEVER launch a Spark job: client-side query embed → beam
   search (~ef·log n candidate gathers) → float64 exact re-score of the
@@ -30,6 +30,20 @@ loop, 8 s at sf0.1/5k chunks, 57 s at sf1/50k (linear; pgvector's
 HNSW build is likewise the slow half and parallelizes by sharding);
 serve ≈1.8-3.6 ms/query at those sizes (beam is sublinear, so the
 per-query number barely moves with corpus growth).
+
+Refresh (ServedPipelineIndex.refresh) applies each sync's committed
+delta in the driver, with no Spark job: the derived tables' delta
+versions hold tombstoned document keys plus the re-derived rows, so
+the resident arrays drop the rows of tombstoned documents, append the
+new rows, and read the payloads of new document ids straight from the
+documents table's parquet files. The HNSW graph takes removals as
+soft deletes — a removed node still routes, is never returned — the
+way pgvector's HNSW keeps dead tuples until VACUUM. Storage compaction
+plays VACUUM's role: the pipeline's compaction rule (and resync())
+rewrites the derived tables in full, which moves their base version,
+and that is the one case in which the index is rebuilt. ivfflat has
+no in-place insert; its IVF structure is rebuilt lazily from the
+resident arrays, driver-side.
 
 Memory honesty at 100 TB: a serving host holds its shard —
 d×(4+8) B/vector (float32 graph matrix + float64 re-score copy) plus
@@ -107,15 +121,8 @@ class ServedPipelineIndex:
             )
         # ONE Arrow hop per build: embeddings ⋈ chunks (executor-side
         # join, then columnar transfer). Document payloads ride a
-        # second small frame keyed by id. The per-chunk embedding
-        # signature (Spark-side xxhash64 — NOT driver math, so refresh
-        # can recompute it without moving vectors) powers the
-        # incremental refresh() delta detection.
-        pdf = (
-            emb.withColumn("__sig", F.xxhash64(F.to_json(F.col("embedding"))))
-            .join(chunks, "chunk_id")
-            .toPandas()
-        )
+        # second small frame keyed by id.
+        pdf = emb.join(chunks, "chunk_id").toPandas()
         ddf = docs.toPandas()
 
         self.chunk_ids = pdf["chunk_id"].to_numpy()
@@ -129,9 +136,22 @@ class ServedPipelineIndex:
         self.norms64 = np.linalg.norm(self.mat64, axis=1)
         self.doc_json = dict(zip(ddf["id"].tolist(), ddf["document"].tolist()))
         self.row_of = {int(c): i for i, c in enumerate(self.chunk_ids)}
-        self._sig = dict(
-            zip((int(c) for c in pdf["chunk_id"]), (int(s) for s in pdf["__sig"]))
+        # what refresh() applies deltas on top of: each derived table's
+        # base version, and the highest document id already read
+        # (ids only grow, so later documents are exactly those above it)
+        ver = dict(self.version_token)
+        self._bases = {
+            name: pipeline._tables[name].stats(ver[name]).get("base")
+            for name in self._delta_tables()
+        }
+        doc_max = collection.documents.stats(ver["documents"]).get("max_id")
+        self._doc_hi = int(
+            doc_max if doc_max is not None
+            else max(self.doc_json, default=0)
         )
+        # bumped by every refresh that changes the resident rows:
+        # caches derived from the row order key on it
+        self._generation = 0
 
         # ANN structure built LAZILY on first search: hybrid serving
         # only needs the matrix (full matvec), so a hybrid-only
@@ -192,7 +212,7 @@ class ServedPipelineIndex:
         # index (ADVICE r8 #1)
         self._ann_build = 0
         self._doc_meta = None  # lazily-parsed metadata for filtered serving
-        self._doc_grp = None  # (perm, starts, uniq, n_rows) for segment-max
+        self._doc_grp = None  # ((perm, starts, uniq, n_rows), generation)
         # filter-JSON -> {doc_ids, mask} bitmap cache (the partial-index
         # analog); invalidated wholesale on refresh()
         self._filter_cache: dict[str, dict] = {}
@@ -237,7 +257,7 @@ class ServedPipelineIndex:
             int(d): "{}" for d in np.unique(self.doc_ids)
         }
         self.row_of = {int(c): i for i, c in enumerate(self.chunk_ids)}
-        self._sig = {}
+        self._generation = 0
         self.kind = kind
         self._params = params or (
             {"lists": 100, "probes": 4} if kind == "ivfflat"
@@ -292,109 +312,185 @@ class ServedPipelineIndex:
     def is_stale(self) -> bool:
         return self._version_token() != self.version_token
 
+    def _delta_tables(self) -> tuple[str, str]:
+        return f"{self.field}_chunks", f"{self.field}_embeddings"
+
     def refresh(self) -> "ServedPipelineIndex":
-        """Catch up with a sync. PURE APPENDS (the streaming-ingest /
-        bulk-upsert common case) insert into the LIVE graph —
-        O(batch) via ResidentHNSW.add, the pgvector
-        trigger-maintained-insert analog — so serving never pays the
-        O(corpus) rebuild for growth. Changed or removed chunks fall
-        back to a full rebuild (graph deletion is out of scope, the
-        same REINDEX guidance pgvector gives for heavy churn).
+        """Catch up with a sync by applying its committed delta to the
+        resident state — the pgvector analog is the live index taking
+        the new tuples in as they are inserted (queries.rs:117-119).
+        No Spark job runs on an unsharded index. Returns self, or a
+        fresh index where a rebuild is needed.
 
-        Delta detection never moves vectors: Spark computes a per-chunk
-        xxhash64 signature and only (chunk_id, sig) pairs reach the
-        driver; only the added rows' vectors ride Arrow. The document
-        payload map IS re-read wholesale — it is resident O(docs)
-        state anyway, and a metadata-only upsert must be visible.
-        Returns self (incremental) or a fresh index (rebuild)."""
-        from pyspark.sql import functions as F
+        Protocol, per changed version token:
+        1. Read what the chunks and embeddings tables hold on top of
+           the base versions this index was built from
+           (`BucketedVersionedTable.delta_since`: tombstoned doc keys
+           plus `_delta` rows, read with pyarrow).
+        2. Drop resident rows whose doc key is tombstoned and whose
+           chunk id is not in the delta (upserts re-id documents, so a
+           changed document is one removed id and one added id);
+           append delta rows not yet resident.
+        3. The HNSW graph takes removals as soft deletes
+           (`ResidentHNSW.remove`: the node keeps routing, is never
+           returned) and new rows through `ResidentHNSW.add`. An
+           ivfflat index is dropped and rebuilt lazily from the
+           resident arrays on the next search, driver-side only.
+        4. Payloads: documents above the highest id already read come
+           from the current documents version (pyarrow; the id footer
+           statistics skip the files an upsert did not write);
+           tombstoned documents that no longer have chunks leave the
+           payload map once the documents table confirms them gone.
 
+        Dead graph nodes pile up only until storage compacts. The
+        pipeline's compaction rule (and `resync()`) rewrites the
+        derived tables in full — pgvector's VACUUM plays that role —
+        and a full rewrite moves the base, which is the one case that
+        rebuilds here. A reader caught between the chunks and the
+        embeddings pointer replace (their deltas disagree) keeps
+        serving its old state and retries on the next call.
+
+        A sharded index (``shard`` set) evaluates its doc-hash filter
+        on the new documents with one small Spark select, so that
+        membership matches the build plan's hash exactly."""
         token = self._version_token()
         if token == self.version_token:
             return self
-        emb = self.pipeline.table(f"{self.field}_embeddings")
-        if self.shard is not None:
-            # shard scope: only this shard's chunks count as deltas —
-            # another shard's appends must not look "added" here
-            i, n = self.shard
-            shard_chunks = (
-                self.pipeline.table(f"{self.field}_chunks")
-                .filter(F.pmod(F.xxhash64(F.col("document_id")), F.lit(n)) == i)
-                .select("chunk_id")
-            )
-            emb = emb.join(shard_chunks, "chunk_id", "left_semi")
-        sigs = {
-            int(r["chunk_id"]): int(r["s"])
-            for r in emb.select(
-                "chunk_id",
-                F.xxhash64(F.to_json(F.col("embedding"))).alias("s"),
-            ).collect()
-        }
-        removed = [c for c in self._sig if c not in sigs]
-        changed = [c for c, s in sigs.items()
-                   if c in self._sig and self._sig[c] != s]
-        added = [c for c in sigs if c not in self._sig]
-        if removed or changed:
+        ver = dict(token)
+        names = self._delta_tables()
+        tables = [self.pipeline._tables[n] for n in names]
+        cols = (["chunk_id", "document_id", "chunk"], ["chunk_id", "embedding"])
+        deltas = [
+            t.delta_since(ver[n], self._bases[n], c)
+            for t, n, c in zip(tables, names, cols)
+        ]
+        if deltas[0] is None and deltas[1] is None:  # the base moved
             return ServedPipelineIndex(self.collection, self.pipeline,
                                        self.field, shard=self.shard)
-
-        if added:
-            spark = emb.sparkSession
-            add_df = spark.createDataFrame(
-                [(int(c),) for c in added], "chunk_id long"
-            )
-            chunks = self.pipeline.table(f"{self.field}_chunks").select(
-                "chunk_id", "document_id", "chunk"
-            )
-            pdf = (
-                emb.join(add_df, "chunk_id", "left_semi")
-                .join(chunks, "chunk_id")
-                .toPandas()
-            )
-            new_ids = pdf["chunk_id"].to_numpy()
-            new_mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            base = len(self.chunk_ids)
-            self.chunk_ids = np.concatenate([self.chunk_ids, new_ids])
-            self.doc_ids = np.concatenate(
-                [self.doc_ids, pdf["document_id"].to_numpy()]
-            )
-            self.chunks.extend(pdf["chunk"].tolist())
-            self.mat64 = (
-                np.concatenate([self.mat64, new_mat])
-                if len(self.mat64)
-                else new_mat
-            )
-            self.norms64 = np.concatenate(
-                [self.norms64, np.linalg.norm(new_mat, axis=1)]
-            )
-            for i, c in enumerate(new_ids):
-                self.row_of[int(c)] = base + i
-                self._sig[int(c)] = sigs[int(c)]
-            if self._hnsw is not None and self.kind == "hnsw":
-                # live graph: O(batch) inserts
-                self._hnsw.add(new_ids, new_mat.astype(np.float32))
-            else:
-                # ivfflat (no in-place insert) or still-lazy: next
-                # search rebuilds from the already-appended resident
-                # arrays — driver-side only, no Spark job
-                self._hnsw = None
-            # either way the ANN's row set changed: derived caches
-            # (_ann_doc_cache, ann_mask) must not survive (ADVICE r8 #1)
-            self._ann_build += 1
-
-        # payload map: metadata-only upserts must surface
-        docs = self.collection.documents.read().select("id", "document")
+        if None in deltas:
+            return self  # between two pointer replaces: retry next call
+        (tomb, crows), (etomb, erows) = deltas
+        c_ids = _int_col(crows, "chunk_id")
+        if tomb != etomb or not np.array_equal(
+            np.sort(c_ids), np.sort(_int_col(erows, "chunk_id"))
+        ):
+            return self  # the tables are at different versions: retry
+        tomb_ids = np.fromiter((int(k) for k in tomb), dtype=np.int64,
+                               count=len(tomb))
+        c_docs = _int_col(crows, "document_id")
+        gone = np.isin(self.doc_ids, tomb_ids) & ~np.isin(self.chunk_ids, c_ids)
+        fresh = np.flatnonzero(~np.isin(c_ids, self.chunk_ids))
+        # tombstoned documents with no chunk on either side: only the
+        # documents table tells whether they still exist
+        chunkless = [
+            d for d in tomb_ids[~np.isin(tomb_ids, self.doc_ids)
+                                & ~np.isin(tomb_ids, c_docs)].tolist()
+            if d in self.doc_json
+        ]
+        docs = self.collection.documents
+        try:
+            new_docs = docs.read_arrow(ver["documents"], ["id", "document"],
+                                       above=("id", self._doc_hi))
+            live = (_int_col(docs.read_arrow(ver["documents"], ["id"]), "id")
+                    if chunkless else None)
+        except OSError:  # documents version vacuumed under us: retry
+            return self
+        nd_ids = _int_col(new_docs, "id")
         if self.shard is not None:
-            i, n = self.shard
-            docs = docs.filter(F.pmod(F.xxhash64(F.col("id")), F.lit(n)) == i)
-        ddf = docs.toPandas()
-        self.doc_json = dict(zip(ddf["id"].tolist(), ddf["document"].tolist()))
+            own = self._owned(np.concatenate([c_docs[fresh], nd_ids]))
+            fresh = fresh[np.isin(c_docs[fresh], own)]
+            nd_keep = np.isin(nd_ids, own)
+        else:
+            nd_keep = np.ones(len(nd_ids), dtype=bool)
+
+        # payload map: drop documents whose chunks are gone, and the
+        # chunkless ones the documents table no longer holds
+        dead_docs = set(self.doc_ids[gone].tolist())
+        if chunkless:
+            dead_docs.update(
+                np.asarray(chunkless)[~np.isin(chunkless, live)].tolist()
+            )
+        for d in dead_docs:
+            self.doc_json.pop(d, None)
+        if len(nd_ids):
+            self.doc_json.update(
+                (d, payload) for d, payload, k in zip(
+                    nd_ids.tolist(),
+                    new_docs.column("document").to_pylist(),
+                    nd_keep,
+                ) if k
+            )
+            self._doc_hi = max(self._doc_hi, int(nd_ids.max()))
+
+        if gone.any() or fresh.size:
+            self._apply_rows(gone, crows, erows, fresh)
         self._doc_meta = None  # parsed-metadata cache follows the payload map
         self._filter_cache = {}  # bitmaps are stale: docs/metadata moved
         self.version_token = token
         return self
+
+    def _owned(self, doc_ids: np.ndarray) -> np.ndarray:
+        """The subset of `doc_ids` this shard holds: the build plan's
+        pmod(xxhash64(id), n) == i, evaluated by Spark so the hash is
+        bit-identical (one small job)."""
+        from pyspark.sql import functions as F
+
+        if not len(doc_ids):
+            return doc_ids
+        i, n = self.shard
+        rows = (
+            self.collection.spark.createDataFrame(
+                [(int(d),) for d in np.unique(doc_ids)], "id long"
+            )
+            .filter(F.pmod(F.xxhash64(F.col("id")), F.lit(n)) == i)
+            .collect()
+        )
+        return np.asarray([r["id"] for r in rows], dtype=np.int64)
+
+    def _apply_rows(self, gone, crows, erows, fresh) -> None:
+        """Remove the `gone` resident rows and append the chunks-delta
+        rows at positions `fresh` (vectors joined from the embeddings
+        delta by chunk id)."""
+        keep = ~gone
+        new_ids = _int_col(crows, "chunk_id")[fresh]
+        new_mat = np.zeros((0, self.mat64.shape[1]))
+        new_chunks: list = []
+        if len(new_ids):
+            e_pos = {c: i for i, c in
+                     enumerate(_int_col(erows, "chunk_id").tolist())}
+            vecs = erows.column("embedding").take(
+                [e_pos[c] for c in new_ids.tolist()]
+            ).combine_chunks()
+            new_mat = np.asarray(
+                vecs.flatten().to_numpy(), dtype=np.float64
+            ).reshape(len(new_ids), -1)
+            new_chunks = crows.column("chunk").take(fresh).to_pylist()
+        if self._hnsw is not None and self.kind == "hnsw":
+            # live graph: soft deletes + O(batch) inserts
+            if gone.any():
+                self._hnsw.remove(self.chunk_ids[gone])
+            if len(new_ids):
+                self._hnsw.add(new_ids, new_mat.astype(np.float32))
+        else:
+            # ivfflat (no in-place insert) or still-lazy: next search
+            # rebuilds from the resident arrays — driver-side only
+            self._hnsw = None
+        self.chunk_ids = np.concatenate([self.chunk_ids[keep], new_ids])
+        self.doc_ids = np.concatenate(
+            [self.doc_ids[keep], _int_col(crows, "document_id")[fresh]]
+        )
+        self.chunks = [c for c, k in zip(self.chunks, keep) if k] + new_chunks
+        old = self.mat64[keep]
+        self.mat64 = np.concatenate([old, new_mat]) if len(old) else new_mat
+        self.norms64 = np.concatenate(
+            [self.norms64[keep], np.linalg.norm(new_mat, axis=1)]
+        )
+        self.row_of = {int(c): i for i, c in enumerate(self.chunk_ids)}
+        # the ANN's row set changed: derived caches (_ann_doc_cache,
+        # ann_mask) must not survive (ADVICE r8 #1); nor may the
+        # row-order caches (_doc_groups, _norm32d)
+        self._ann_build += 1
+        self._generation += 1
 
     # -- filtered serving ----------------------------------------------------
 
@@ -441,6 +537,24 @@ class ServedPipelineIndex:
             ent["mask"] = np.isin(self.doc_ids, ent["doc_ids"])
         return ent["mask"]
 
+    def _ann_allowed(self, filter: dict, payload_mask: np.ndarray, idx):
+        """The filter's allowed-row mask in the ANN's row order. HNSW
+        rows share the payload order until a refresh removes rows (the
+        graph keeps soft-deleted nodes, so it is then longer); the IVF
+        build clusters rows by centroid. Otherwise translate through
+        the index's ids — cached per (filter, ANN build): the np.isin
+        translation was O(n log n) per query on the filtered hot
+        path."""
+        if self.kind == "hnsw" and len(idx.ids) == len(self.chunk_ids):
+            return payload_mask
+        ent = self._filter_entry(filter)
+        cached = ent.get("ann_mask")
+        if cached is None or cached[1] != self._ann_build:
+            cached = ent["ann_mask"] = (
+                idx.row_mask(self.chunk_ids[payload_mask]), self._ann_build,
+            )
+        return cached[0]
+
     # -- serving -----------------------------------------------------------
 
     def search(
@@ -480,25 +594,10 @@ class ServedPipelineIndex:
         idx = self.hnsw  # kind was routed eagerly; this only pays the build
         allowed = None
         if filter is not None:
-            ent = self._filter_entry(filter)
             payload_mask = self._row_mask_for_filter(filter)
             if not payload_mask.any():
                 return []
-            # HNSW rows share the payload order; the IVF build clusters
-            # rows by centroid, so translate through the index's ids —
-            # cached per (filter, ANN build): the np.isin translation
-            # was O(n log n) per query on the filtered hot path
-            if self.kind == "ivfflat":
-                cached = ent.get("ann_mask")
-                if cached is None or cached[1] != self._ann_build:
-                    cached = (
-                        idx.row_mask(self.chunk_ids[payload_mask]),
-                        self._ann_build,
-                    )
-                    ent["ann_mask"] = cached
-                allowed = cached[0]
-            else:
-                allowed = payload_mask
+            allowed = self._ann_allowed(filter, payload_mask, idx)
         # beam for extra candidates, then float64 exact re-score: the
         # approximate layer only GENERATES, the exact layer RANKS — so
         # float32 graph error can't perturb the returned ordering.
@@ -547,15 +646,17 @@ class ServedPipelineIndex:
 
     def _doc_groups(self):
         """Row permutation sorted by doc + segment starts + unique doc
-        ids — computed once per index version (invalidated by length
-        change on append-refresh), so every query's per-doc best-chunk
-        reduction is a single C-level ``np.maximum.reduceat``."""
-        if self._doc_grp is None or self._doc_grp[3] != len(self.doc_ids):
+        ids + row count — computed once per resident row set (keyed on
+        the refresh generation: a refresh that removes as many rows as
+        it adds leaves the length unchanged), so every query's per-doc
+        best-chunk reduction is a single C-level
+        ``np.maximum.reduceat``."""
+        if self._doc_grp is None or self._doc_grp[1] != self._generation:
             perm = np.argsort(self.doc_ids, kind="stable")
             uniq, starts = np.unique(self.doc_ids[perm], return_index=True)
-            self._doc_grp = (perm, starts, uniq.astype(np.int64),
-                             len(self.doc_ids))
-        return self._doc_grp
+            self._doc_grp = ((perm, starts, uniq.astype(np.int64),
+                              len(self.doc_ids)), self._generation)
+        return self._doc_grp[0]
 
     def best_chunk_scores(
         self, query_text: str, filter: dict | None = None
@@ -651,18 +752,18 @@ class ServedPipelineIndex:
         blocks, so the read is prefetch-friendly instead of
         random-access latency-bound (profiled ~3 µs/doc random vs
         sequential-class when sorted). Built in row blocks to avoid a
-        full-matrix f64 temporary; invalidated by length change on
-        append-refresh (same discipline as _doc_groups)."""
+        full-matrix f64 temporary; keyed on the refresh generation
+        (same discipline as _doc_groups)."""
         perm, _, _, n = self._doc_groups()
         cached = getattr(self, "_mat32d_cache", None)
-        if cached is None or cached[1] != n:
+        if cached is None or cached[1] != self._generation:
             norms = np.where(self.norms64 == 0.0, 1.0, self.norms64)
             out = np.empty((n, self.mat64.shape[1]), dtype=np.float32)
             step = 1 << 18
             for lo in range(0, n, step):
                 pr = perm[lo:lo + step]
                 out[lo:lo + step] = self.mat64[pr] / norms[pr, None]
-            cached = (out, n)
+            cached = (out, self._generation)
             self._mat32d_cache = cached
         return cached[0]
 
@@ -780,21 +881,10 @@ class ServedPipelineIndex:
         idx = self.hnsw
         allowed = None
         if filter is not None:
-            ent = self._filter_entry(filter)
             payload_mask = self._row_mask_for_filter(filter)
             if not payload_mask.any():
                 return _ret(*empty, safe_info)
-            if self.kind == "ivfflat":  # cached translation, same as search()
-                cached = ent.get("ann_mask")
-                if cached is None or cached[1] != self._ann_build:
-                    cached = (
-                        idx.row_mask(self.chunk_ids[payload_mask]),
-                        self._ann_build,
-                    )
-                    ent["ann_mask"] = cached
-                allowed = cached[0]
-            else:
-                allowed = payload_mask
+            allowed = self._ann_allowed(filter, payload_mask, idx)
         avail = (
             len(self.chunk_ids) if allowed is None else int(allowed.sum())
         )
@@ -1064,6 +1154,14 @@ class ServedTextIndex:
         return {int(d): float(s) for d, s in zip(docs, scores)}
 
 
+def _int_col(table, name: str) -> np.ndarray:
+    """An integer column of a pyarrow table as int64 (empty if the
+    table is None)."""
+    if table is None:
+        return np.empty(0, dtype=np.int64)
+    return np.asarray(table.column(name).to_numpy(), dtype=np.int64)
+
+
 def _build_shards(n: int, make):
     """Construct/refresh N shard indexes CONCURRENTLY (guide §2.6).
 
@@ -1144,9 +1242,9 @@ class ShardedPipelineIndex:
     per-query time of a 1/N corpus (ANN search is sublinear, so the
     scatter is a strict latency WIN over one giant shard; the gather
     merge of N×limit rows is microseconds). Staleness and refresh
-    delegate per-shard: appends land only on the owning shard (the
-    shard filter scopes delta detection), so a sync refreshes N shards
-    in parallel with O(batch/n) work each."""
+    delegate per-shard: each shard applies the same committed delta,
+    keeping only the new documents its doc-hash filter owns, so a sync
+    refreshes N shards in parallel with O(batch) work each."""
 
     def __init__(self, collection, pipeline, field: str, n_shards: int):
         if n_shards < 1:

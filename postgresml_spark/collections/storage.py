@@ -12,7 +12,10 @@ or several) goes through `_commit`, in three fixed steps:
    unpublished leftover `v_<cur+1>`, moves the new files in, hardlinks
    the previous version's buckets the write does not replace, and
    writes the sidecars (`_delta`, `_tombstones`, `_schema.json`,
-   `_stats.json`).
+   `_stats.json`). `_stats.json` records the version's base: a full or
+   bucket-partial write is its own base, a delta write carries its
+   predecessor's forward, so a reader holding version n can ask
+   `delta_since` for what a later version changed on top of it.
 2. Publish. Only after every table is staged, each pointer is written
    to a dot-prefixed temp file and moved into place with `os.replace`,
    so a reader sees the old number or the new one, never a torn file.
@@ -93,19 +96,35 @@ def _link_files(src: str, dst: str) -> None:
                 shutil.copy2(s, d)
 
 
+def _parquet_files(d: str) -> list[str]:
+    """The parquet files directly under `d`, sorted (none if `d` is
+    absent). Spark reads of an underscore-prefixed sidecar dir get
+    this explicit list: given the dir itself, Spark's listing treats
+    the leaf name as hidden and logs `All paths were ignored` on every
+    read."""
+    if not os.path.isdir(d):
+        return []
+    return [os.path.join(d, fn) for fn in sorted(os.listdir(d))
+            if fn.endswith(".parquet") and not fn.startswith((".", "_"))]
+
+
+def _concat(tables: list):
+    """One pyarrow table from per-file reads (None for no files). Files
+    of one dataset can differ in a column's nullability, which the
+    default promotion unifies."""
+    import pyarrow as pa
+
+    return pa.concat_tables(tables, promote_options="default") if tables else None
+
+
 def _read_keys(tomb_dir: str) -> set:
     """Driver-side read of a `_tombstones` dir's key set (empty if
     absent)."""
     import pyarrow.parquet as pq
 
     keys: set = set()
-    if os.path.isdir(tomb_dir):
-        for fn in os.listdir(tomb_dir):
-            if fn.endswith(".parquet"):
-                keys.update(
-                    pq.read_table(os.path.join(tomb_dir, fn))
-                    .column("__key").to_pylist()
-                )
+    for f in _parquet_files(tomb_dir):
+        keys.update(pq.read_table(f).column("__key").to_pylist())
     return keys
 
 
@@ -144,6 +163,24 @@ def _filter_keys_not_in(df: DataFrame, kcol, keys) -> DataFrame:
     )
 
 
+def _data_files(path: str) -> list[str]:
+    """Every parquet data file of a dataset dir, partition subdirs
+    (names containing '=') included; underscore- or dot-prefixed
+    sidecars (`_delta`, `_tombstones`, `_stats.json`) skipped — the same
+    hidden-path rule Spark's file listing applies."""
+    paths: list[str] = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(
+            d for d in dirs
+            if "=" in d or not (d.startswith("_") or d.startswith("."))
+        )
+        paths.extend(
+            os.path.join(root, fn) for fn in sorted(files)
+            if fn.endswith(".parquet") and not fn.startswith((".", "_"))
+        )
+    return paths
+
+
 def parquet_dir_stats(
     path: str,
     column: str | None = None,
@@ -168,16 +205,7 @@ def parquet_dir_stats(
     mx = None
     nulls = 0
     stats_ok = True
-    paths: list[str] = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [
-            d for d in dirs
-            if "=" in d or not (d.startswith("_") or d.startswith("."))
-        ]
-        for fn in files:
-            if not fn.endswith(".parquet") or fn.startswith((".", "_")):
-                continue
-            paths.append(os.path.join(root, fn))
+    paths = _data_files(path)
     # footer reads are independent I/O — thread-pool them past a few
     # dozen files so a many-file version dir doesn't serialize the
     # driver (VERDICT r9 next #5; the walk itself stays the fallback —
@@ -268,20 +296,20 @@ class VersionedTable:
         except (OSError, ValueError, KeyError):
             return None
 
-    def _read_files(self, path: str, sch):
-        """Parquet read with the recorded write-time schema `sch`
-        (zero-job). Without it: infer, then project to the declared
-        columns — files of a multi-table commit carry the union schema,
-        whose sibling columns are all NULL here."""
+    def _read_files(self, sch, *paths: str):
+        """Parquet read of `paths` with the recorded write-time schema
+        `sch` (zero-job). Without it: infer, then project to the
+        declared columns — files of a multi-table commit carry the
+        union schema, whose sibling columns are all NULL here."""
         if sch is not None:
-            return self.spark.read.schema(sch).parquet(path)
-        df = self.spark.read.parquet(path)
+            return self.spark.read.schema(sch).parquet(*paths)
+        df = self.spark.read.parquet(*paths)
         keep = set(self.spark.createDataFrame([], self.schema).columns)
         keep.update(self._part_cols)
         return df.select(*[c for c in df.columns if c in keep])
 
     def _read_version_dir(self, vdir: str):
-        return self._read_files(vdir, self._load_schema(vdir))
+        return self._read_files(self._load_schema(vdir), vdir)
 
     def _current_version(self) -> int:
         try:
@@ -292,6 +320,26 @@ class VersionedTable:
 
     def exists(self) -> bool:
         return self._current_version() > 0
+
+    def read_arrow(self, v: int, columns: list[str], above=None):
+        """Driver-side pyarrow read (zero Spark jobs) of version `v`'s
+        data files, bucket dirs included, projected to `columns`.
+        `above=(column, lo)` keeps only rows with column > lo; pyarrow
+        prunes row groups by their footer statistics, so a read of
+        freshly assigned ids (which only grow) decodes just the files
+        that hold them. Sidecar dirs are not applied: use it on tables
+        that are never delta-written (the documents table). Raises
+        FileNotFoundError once `v` has been vacuumed."""
+        import pyarrow.parquet as pq
+
+        vdir = self._vdir(v)
+        if not os.path.isdir(vdir):
+            raise FileNotFoundError(vdir)
+        filters = None if above is None else [(above[0], ">", above[1])]
+        return _concat([
+            pq.read_table(f, columns=columns, filters=filters)
+            for f in _data_files(vdir)
+        ])
 
     def _read_at(self, v: int) -> DataFrame:
         """Logical content of published version `v`."""
@@ -447,22 +495,48 @@ class BucketedVersionedTable(VersionedTable):
     def _delta_at(self, vdir: str):
         """The version's `_delta` rows (None if it has none), read with
         the delta schema recorded at write — no inference job."""
-        p = os.path.join(vdir, "_delta")
-        if not os.path.isdir(p):
+        files = _parquet_files(os.path.join(vdir, "_delta"))
+        if not files:
             return None
-        return self._read_files(p, self._load_schema(vdir, key="delta"))
+        return self._read_files(self._load_schema(vdir, key="delta"), *files)
 
-    def stats(self) -> dict:
-        return _read_json(
-            os.path.join(self._vdir(self._current_version()), "_stats.json")
-        )
+    def stats(self, v: int | None = None) -> dict:
+        """Version `v`'s `_stats.json` (default: the current version)."""
+        if v is None:
+            v = self._current_version()
+        return _read_json(os.path.join(self._vdir(v), "_stats.json"))
 
     def write_stats(self, **kw) -> None:
+        """Merge `kw` into the current version's `_stats.json`."""
         v = self._current_version()
         if v == 0:
             return
+        st = self.stats(v)
+        st.update(kw)
         atomic_write(os.path.join(self._vdir(v), "_stats.json"),
-                     json.dumps(kw))
+                     json.dumps(st))
+
+    def delta_since(self, v: int, base, columns: list[str]):
+        """What version `v` changed on top of version `base`, read
+        driver-side with pyarrow (zero Spark jobs): (tombstoned keys,
+        `_delta` rows projected to `columns`, or None when there are
+        none). v's logical content is base's rows minus those whose key
+        is tombstoned, plus the delta rows.
+
+        Returns None unless v was written on top of `base`: `_commit`
+        records each version's base in `_stats.json` (a full or
+        bucket-partial write is its own base, a delta write carries its
+        predecessor's forward). None therefore means a full rewrite
+        since `base` (resync, compaction) or a version without the
+        record, and the caller must re-read the whole table."""
+        import pyarrow.parquet as pq
+
+        vdir = self._vdir(v)
+        if base is None or self.stats(v).get("base") != base:
+            return None
+        files = _parquet_files(os.path.join(vdir, "_delta"))
+        rows = _concat([pq.read_table(f, columns=columns) for f in files])
+        return _read_keys(os.path.join(vdir, "_tombstones")), rows
 
     # literal-tombstone cutover: below this many keys the read-side
     # anti-join becomes a codegen NOT-IN filter (no broadcast-exchange
@@ -484,17 +558,15 @@ class BucketedVersionedTable(VersionedTable):
         from pyspark.sql import functions as F
 
         tomb_dir = os.path.join(vdir, "_tombstones")
-        if not os.path.isdir(tomb_dir):
+        files = _parquet_files(tomb_dir)
+        if not files:
             return out
         keys = None
         try:
             import pyarrow.parquet as pq
 
-            files = [f for f in sorted(os.listdir(tomb_dir))
-                     if f.endswith(".parquet")]
             if sum(
-                pq.read_metadata(os.path.join(tomb_dir, f)).num_rows
-                for f in files
+                pq.read_metadata(f).num_rows for f in files
             ) <= self._TOMB_LITERAL_MAX:
                 keys = _read_keys(tomb_dir)
         except (OSError, ValueError, KeyError) as e:
@@ -512,7 +584,7 @@ class BucketedVersionedTable(VersionedTable):
             if not keys:
                 return out
             return _filter_keys_not_in(out, self._key_col(), sorted(keys))
-        tomb = self.spark.read.schema("__key string").parquet(tomb_dir)
+        tomb = self.spark.read.schema("__key string").parquet(*files)
         return out.join(tomb, self._key_col() == F.col("__key"), "left_anti")
 
     def _read_at(self, v: int) -> DataFrame:
@@ -729,11 +801,13 @@ def _commit(entries, keep_versions: int = 2, *, touched: set | None = None,
                         _link_files(os.path.join(prev, name),
                                     os.path.join(out, name))
             if delta:
+                # the predecessor's stats carry its base forward
                 _link_files(tomb, os.path.join(out, "_tombstones"))
                 st = _read_json(os.path.join(prev, "_stats.json"))
                 st["tomb_rows"] = len(keys)
-                atomic_write(os.path.join(out, "_stats.json"),
-                             json.dumps(st))
+            else:
+                st = {"base": v}
+            atomic_write(os.path.join(out, "_stats.json"), json.dumps(st))
             tbl._save_schema(out, files_schema, delta_schema=delta_schema)
         # 2. publish, only once every table is staged
         for tbl, v, _, _ in plans:

@@ -1306,6 +1306,9 @@ class ResidentHNSW:
         self.upper: list = [None] + [dict() for _ in range(self.max_level)]
         self._seen = np.zeros(n, dtype=np.int64)
         self._stamp = 0
+        # soft deletes (see remove): None until the first removal, then
+        # a per-row flag; removed rows stay in the graph and route
+        self._live = None
         self.entry = 0
         if n == 0:
             return
@@ -1459,7 +1462,9 @@ class ResidentHNSW:
         termination bound — reflects allowed candidates only and the
         beam naturally keeps expanding until ef allowed rows surface
         (the hnswlib filter-functor semantics; pgvector 0.8's
-        iterative scan reaches the same behavior by resuming)."""
+        iterative scan reaches the same behavior by resuming). Search
+        passes the soft-delete flags (see ``remove``) the same way, so
+        removed nodes route but never return."""
         import heapq
 
         self._stamp += 1
@@ -1734,6 +1739,10 @@ class ResidentHNSW:
           (disconnected pockets), the direct scan finishes the job, so
           filtered search NEVER returns fewer than min(k, matches)
           rows — a completeness guarantee pgvector itself doesn't make.
+
+        Rows soft-deleted by ``remove`` are never returned, on every
+        path; an unfiltered search over a graph without removals runs
+        exactly as before.
         """
         q = np.asarray(query_vec, dtype=np.float32)
         qn = np.linalg.norm(q)
@@ -1744,7 +1753,10 @@ class ResidentHNSW:
         ef = max(ef or 4 * k, k)
         if upper_ef is None:
             upper_ef = max(8, ef // 8)
+        live = self._live
         if allowed is not None:
+            if live is not None:
+                allowed = allowed & live
             idxs = np.flatnonzero(allowed)
             if not idxs.size:
                 return []
@@ -1778,7 +1790,12 @@ class ResidentHNSW:
                 if found:
                     seeds = [i for _, i in found]
         if allowed is None:
-            found = self._beam(q, seeds, 0, ef)[:k]
+            found = self._beam(q, seeds, 0, ef, allowed=live)[:k]
+            if live is not None and len(found) < k:
+                # removals can leave the beam short of k live rows
+                idxs = np.flatnonzero(live)
+                if len(found) < min(k, idxs.size):
+                    return self._masked_exact(q, idxs, k)
             return [(self.ids[i].item(), float(1.0 - d)) for d, i in found]
         e = ef
         while True:
@@ -1799,6 +1816,20 @@ class ResidentHNSW:
         top = np.argpartition(-scores, kk - 1)[:kk]
         top = top[np.argsort(-scores[top], kind="stable")]
         return [(self.ids[idxs[i]].item(), float(scores[i])) for i in top]
+
+    def remove(self, ids) -> None:
+        """Soft-delete the rows holding `ids`. A removed node keeps its
+        links, so it still routes searches, but no search returns it —
+        pgvector's HNSW likewise leaves dead tuples in the graph until
+        VACUUM. Removed nodes cost memory and beam steps until the
+        owner rebuilds; the served index rebuilds whenever storage
+        compacts, which bounds them."""
+        hit = np.isin(self.ids, np.asarray(ids))
+        if not hit.any():
+            return
+        if self._live is None:
+            self._live = np.ones(len(self.ids), dtype=bool)
+        self._live &= ~hit
 
     def add(self, new_ids, new_vecs, seed: int = 43) -> None:
         """Incremental inserts into the live graph — the serving-tier
@@ -1829,6 +1860,8 @@ class ResidentHNSW:
         )
         self.cnt0 = np.concatenate([self.cnt0, np.zeros(b, dtype=np.int32)])
         self._seen = np.concatenate([self._seen, np.zeros(b, dtype=np.int64)])
+        if self._live is not None:
+            self._live = np.concatenate([self._live, np.ones(b, dtype=bool)])
         for j in range(b):
             node = start + j
             lvl = int(new_levels[j])
@@ -1878,6 +1911,7 @@ class ResidentHNSW:
                 "up_node": np.asarray(up_node, dtype=np.int64),
                 "up_off": np.asarray(up_off, dtype=np.int64),
                 "up_flat": np.asarray(up_flat, dtype=np.int32),
+                **({} if self._live is None else {"live": self._live}),
             },
         )
 
@@ -1908,6 +1942,7 @@ class ResidentHNSW:
             ]
         idx._seen = np.zeros(len(idx.mat), dtype=np.int64)
         idx._stamp = 0
+        idx._live = arrays.get("live")
         return idx
 
 

@@ -545,9 +545,10 @@ def test_served_hybrid_filtered_matches_exact(hybrid_setup):
 
 
 def test_incremental_refresh_appends_into_live_graph(spark, sf_dir):
-    """Append-only sync deltas must NOT rebuild the HNSW: the same
+    """Sync deltas must NOT rebuild the HNSW: on an append the same
     index object grows via ResidentHNSW.add (O(batch)); a changed
-    document falls back to a full rebuild. Both paths stay correct."""
+    document (a removed id plus an added one) refreshes in place too,
+    the old id soft-deleted in the live graph. Both stay exact."""
     import postgresml_spark.collections.serving as serving_mod
 
     wh = tempfile.mkdtemp(prefix="pgml_served_inc_")
@@ -598,17 +599,35 @@ def test_incremental_refresh_appends_into_live_graph(spark, sf_dir):
             # metadata-visible growth again (idempotent second refresh)
             assert pipe.served_index("text") is idx0
 
-            # CHANGED document -> full rebuild
+            # CHANGED document -> refreshed in place, no rebuild
             coll.upsert_documents(
                 [{"id": 20_000_001, "text": "completely rewritten text body"}]
             )
             idx2 = pipe.served_index("text")
-            assert builds["n"] == 1, "changed chunk must rebuild"
-            assert idx2 is not idx0
+            assert builds["n"] == 0, "changed chunk must refresh in place"
+            assert idx2 is idx0 and len(idx2.chunk_ids) == n0 + 2
+            # a live HNSW keeps the old node, soft-deleted; an ivfflat
+            # (the router's pick on clustered corpora) rebuilds lazily
+            assert len(idx2.hnsw.mat) == n0 + (3 if idx2.kind == "hnsw" else 2)
+            for text in ("completely rewritten text body",
+                         "unique okapi laser payload",
+                         "another brand new banana entry"):
+                # the ANN is approximate (a routed ivfflat probes 4 of
+                # its lists): the top hit and every shared score agree
+                res = coll.vector_search(_q(text), pipe, method="index")
+                exact = coll.vector_search(_q(text), pipe, method="exact")
+                assert res[0]["document_id"] == exact[0]["document_id"]
+                want = {r["document_id"]: r["score"] for r in exact}
+                for r in res:
+                    if r["document_id"] in want:
+                        assert r["score"] == pytest.approx(
+                            want[r["document_id"]], abs=1e-6
+                        )
             res = coll.vector_search(
                 _q("completely rewritten text body"), pipe, method="index"
             )
             assert res[0]["document"]["id"] == 20_000_001
+            assert res[0]["document"]["text"] == "completely rewritten text body"
         finally:
             serving_mod.ServedPipelineIndex.__init__ = orig_init
     finally:
@@ -848,6 +867,47 @@ def test_hnsw_save_load_round_trip(tmp_path):
     loaded.add(np.arange(9000, 9005), extra)
     for q in qs[:5]:
         assert built.search(q, k=10, ef=80) == loaded.search(q, k=10, ef=80)
+
+
+def test_hnsw_remove_soft_deletes(tmp_path):
+    """remove() hides rows from every search path — the unfiltered
+    beam, the masked beam and the exact scan — while the graph keeps
+    them for routing; recall over the live rows holds, add() after a
+    removal serves, and save()/load() keeps the flags."""
+    import numpy as np
+
+    from postgresml_spark.operators.similarity import ResidentHNSW
+
+    rng = np.random.default_rng(5)
+    n, dim = 3000, 24
+    mat = rng.normal(0, 1, (n, dim)).astype(np.float32)
+    ids = np.arange(n) + 10_000
+    idx = ResidentHNSW((ids, mat), m=8, ef_construction=48, workers=1)
+    gone = ids[rng.choice(n, 600, replace=False)]
+    idx.remove(gone)
+    assert len(idx.ids) == n  # still in the graph
+    live = ~np.isin(ids, gone)
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    qs = [mat[i] + rng.normal(0, 0.05, dim) for i in range(30)]
+    hits = 0
+    for q in qs:
+        got = [i for i, _ in idx.search(q, k=10, ef=80)]
+        assert len(got) == 10 and not set(got) & set(gone.tolist())
+        exact = ids[live][np.argsort(-(unit[live] @ q))[:10]]
+        hits += len(set(got) & set(exact.tolist()))
+        # filtered: a wide mask (masked beam) and a narrow one (exact)
+        for frac in (0.9, 0.05):
+            allowed = rng.random(n) < frac
+            res = [i for i, _ in idx.search(q, k=10, ef=80, allowed=allowed)]
+            assert res and not set(res) & set(gone.tolist())
+            assert set(res) <= set(ids[allowed].tolist())
+    assert hits / (10 * len(qs)) >= 0.95
+    idx.add(np.asarray([1]), qs[0])
+    assert idx.search(qs[0], k=1)[0][0] == 1
+    idx.save(str(tmp_path / "hnsw"))
+    loaded = ResidentHNSW.load(str(tmp_path / "hnsw"))
+    for q in qs[:5]:
+        assert loaded.search(q, k=10, ef=80) == idx.search(q, k=10, ef=80)
 
 
 def test_resident_ann_save_load_round_trip(tmp_path):
@@ -1892,6 +1952,201 @@ def test_refresh_invalidates_ann_row_order_caches(spark, tmp_path):
     ann = idx.hnsw
     rows = np.asarray([idx.row_of[int(c)] for c in ann.ids])
     assert (idx.doc_ids[rows] == docs1).all()
+
+
+_WORDS = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+          "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+
+
+def _delta_doc(i, rev=0, text=True):
+    """Document `i` of a small seeded corpus, at revision `rev`. With
+    text=False it has no `text` field, so the pipeline derives no chunk
+    for it, yet it is still a document the payload map must hold."""
+    import numpy as np
+
+    words = np.random.default_rng(1000 * rev + i).choice(_WORDS, 6)
+    d = {"id": i, "cat": "abc"[i % 3], "rev": rev}
+    if text:
+        d["text"] = " ".join(words) + f" r{rev}"
+    return d
+
+
+def _delta_collection(spark, tmp_path, semantic, n=60):
+    coll = Collection("delta", spark, warehouse=str(tmp_path / "wh"))
+    coll.upsert_documents([_delta_doc(i, text=i % 11 != 0) for i in range(n)])
+    pipe = Pipeline("p", {"text": {"semantic_search": semantic}})
+    coll.add_pipeline(pipe)
+    return coll, pipe
+
+
+def _resident(idx):
+    """An index's resident rows in chunk-id order."""
+    import numpy as np
+
+    o = np.argsort(idx.chunk_ids, kind="stable")
+    return (idx.chunk_ids[o].tolist(), idx.doc_ids[o].tolist(),
+            [idx.chunks[i] for i in o], idx.mat64[o])
+
+
+def _assert_equals_fresh_build(coll, pipe, idx):
+    """The refreshed index holds what a fresh build reads, and answers
+    plain and filtered top-10 searches identically."""
+    import numpy as np
+
+    from postgresml_spark.collections.serving import ServedPipelineIndex
+
+    fresh = ServedPipelineIndex(coll, pipe, "text")
+    got, want = _resident(idx), _resident(fresh)
+    assert got[:3] == want[:3]
+    assert np.array_equal(got[3], want[3])
+    assert idx.doc_json == fresh.doc_json
+    for q in ("alpha beta gamma", "sigma tau rho", "pi mu nu r1"):
+        for filt in (None, {"cat": {"$eq": "a"}}):
+            assert [(r["document_id"], round(r["score"], 9))
+                    for r in idx.search(q, limit=10, filter=filt)] == [
+                (r["document_id"], round(r["score"], 9))
+                for r in fresh.search(q, limit=10, filter=filt)
+            ], (q, filt)
+
+
+def test_refresh_applies_sync_delta_without_spark_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """A sync's committed delta (updates, inserts, deletes, chunkless
+    documents) is applied to the resident index with ZERO Spark jobs:
+    same object, live graph kept, state equal to a fresh build. Only a
+    moved base — resync() or the pipeline's compaction — rebuilds."""
+    import os
+
+    coll, pipe = _delta_collection(
+        spark, tmp_path, {"model": "hash:32",
+                          "hnsw": {"m": 8, "ef_construction": 32}},
+    )
+    idx = pipe.served_index("text")
+    idx.search("alpha", limit=3)  # build the graph
+    graph = idx.hnsw
+    # updates (one of them chunkless) mixed with inserts
+    coll.upsert_documents(
+        [_delta_doc(i, rev=1) for i in (1, 2, 4, 5, 7)]
+        + [_delta_doc(22, rev=1, text=False)]
+        + [_delta_doc(i, rev=1) for i in (100, 101, 102)]
+    )
+    with assert_no_spark_jobs(spark, "delta refresh after upsert"):
+        assert pipe.served_index("text") is idx
+    assert idx.hnsw is graph and len(graph.ids) > len(idx.chunk_ids)
+    _assert_equals_fresh_build(coll, pipe, idx)
+    # deletes, including chunkless documents (ids 0, 33)
+    coll.delete_documents({"cat": {"$eq": "a"}})
+    with assert_no_spark_jobs(spark, "delta refresh after delete"):
+        assert pipe.served_index("text") is idx
+    assert idx.hnsw is graph
+    _assert_equals_fresh_build(coll, pipe, idx)
+
+    # resync rewrites the derived tables: the base moved, so rebuild
+    pipe.resync()
+    rebuilt = pipe.served_index("text")
+    assert rebuilt is not idx
+    _assert_equals_fresh_build(coll, pipe, rebuilt)
+    # the new base takes deltas in place again ...
+    coll.upsert_documents([_delta_doc(i, rev=2) for i in range(10, 30, 2)])
+    assert pipe.served_index("text") is rebuilt
+    _assert_equals_fresh_build(coll, pipe, rebuilt)
+    # ... until the compaction rule folds the delta chain back
+    monkeypatch.setattr(pipe, "COMPACTION_MIN_TOMBS", 0)
+    coll.upsert_documents([_delta_doc(31, rev=2)])
+    chunks = pipe._tables["text_chunks"]
+    assert not os.path.isdir(os.path.join(
+        chunks._vdir(chunks._current_version()), "_delta"
+    )), "precondition: the sync compacted"
+    compacted = pipe.served_index("text")
+    assert compacted is not rebuilt
+    _assert_equals_fresh_build(coll, pipe, compacted)
+
+
+def test_ivfflat_refresh_applies_delta_without_spark_jobs(spark, tmp_path):
+    """An ivfflat index takes the same delta with no Spark job; its IVF
+    structure is dropped and rebuilt driver-side on the next search."""
+    coll, pipe = _delta_collection(
+        spark, tmp_path, {"model": "hash:32",
+                          "ivfflat": {"lists": 4, "probes": 4}},
+    )
+    idx = pipe.served_index("text")
+    idx.search("alpha", limit=3)
+    coll.upsert_documents(
+        [_delta_doc(i, rev=1) for i in (3, 6, 9)]
+        + [_delta_doc(i, rev=1) for i in (200, 201)]
+    )
+    with assert_no_spark_jobs(spark, "ivfflat delta refresh"):
+        assert pipe.served_index("text") is idx
+        idx.search("alpha", limit=3)  # lazy driver-side IVF rebuild
+    assert idx.kind == "ivfflat"
+    _assert_equals_fresh_build(coll, pipe, idx)
+
+
+def test_refresh_resets_row_caches_when_counts_balance(spark, tmp_path):
+    """A refresh removing exactly as many chunks as it adds leaves the
+    row count unchanged; the per-doc row caches (_doc_groups,
+    _norm32d) must still re-derive, so the hybrid gathers equal a
+    fresh build's."""
+    import numpy as np
+
+    from postgresml_spark.collections.serving import ServedPipelineIndex
+
+    coll, pipe = _delta_collection(
+        spark, tmp_path, {"model": "hash:32",
+                          "hnsw": {"m": 8, "ef_construction": 32}},
+    )
+    idx = pipe.served_index("text")
+    q = "alpha beta gamma"
+    docs = np.asarray(sorted(idx.doc_json), dtype=np.int64)
+    idx.best_chunk_scores(q)  # populate both caches
+    idx.approx_chunk_scores_for_docs(q, docs)
+    n0 = len(idx.chunk_ids)
+    coll.upsert_documents([_delta_doc(i, rev=1) for i in (1, 2, 4, 5)])
+    assert pipe.served_index("text") is idx
+    assert len(idx.chunk_ids) == n0, "precondition: as many removed as added"
+    fresh = ServedPipelineIndex(coll, pipe, "text")
+    d1, s1 = idx.best_chunk_scores(q)
+    d2, s2 = fresh.best_chunk_scores(q)
+    assert np.array_equal(d1, d2)
+    assert np.allclose(s1, s2, atol=1e-12, rtol=0)
+    docs = np.asarray(sorted(fresh.doc_json), dtype=np.int64)
+    a1, b1, e1 = idx.approx_chunk_scores_for_docs(q, docs)
+    a2, b2, e2 = fresh.approx_chunk_scores_for_docs(q, docs)
+    assert np.array_equal(a1, a2) and e1 == e2
+    assert np.allclose(b1, b2, atol=1e-6, rtol=0)
+
+
+def test_refresh_between_pointer_replaces_keeps_old_state(spark, tmp_path):
+    """A reader that sees the embeddings pointer of a sync but not yet
+    its chunks pointer must not build from the mixed versions: refresh
+    keeps serving the old state and retries on the next call."""
+    from postgresml_spark.collections.storage import atomic_write
+
+    coll, pipe = _delta_collection(
+        spark, tmp_path, {"model": "hash:32",
+                          "hnsw": {"m": 8, "ef_construction": 32}},
+    )
+    idx = pipe.served_index("text")
+    idx.search("alpha", limit=3)
+    before, token = _resident(idx), idx.version_token
+    docs_before = dict(idx.doc_json)
+    coll.upsert_documents(
+        [_delta_doc(1, rev=1), _delta_doc(300, rev=1)]
+    )
+    # roll the chunks pointer back: only embeddings look published
+    chunks = pipe._tables["text_chunks"]
+    v = chunks._current_version()
+    atomic_write(chunks._pointer(), str(v - 1))
+    assert pipe.served_index("text") is idx
+    assert idx.version_token == token and idx.is_stale()
+    assert _resident(idx)[:3] == before[:3]
+    assert idx.doc_json == docs_before
+    assert idx.search("alpha beta", limit=5)
+    # the chunks pointer lands: the next call applies the delta
+    atomic_write(chunks._pointer(), str(v))
+    assert pipe.served_index("text") is idx and not idx.is_stale()
+    _assert_equals_fresh_build(coll, pipe, idx)
 
 
 def test_sharded_scatter_recall_floor_with_widen():
